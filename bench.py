@@ -3,6 +3,9 @@
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+The maintenance harnesses' record is written to $SPARK_GRAFT_MAINT_OUT
+(default ``MAINTBENCH.json`` next to this file).
+
 The metric is total wall-clock seconds across the headline query set
 (each query fully executed via a count-collecting action).
 """
@@ -119,10 +122,10 @@ HEADLINE = [
 # maintenance + in-gate assertions) whose cost is bound by job count,
 # not a user query shape.  Since r10 they run as a SEPARATE
 # maintenance bench (r9 verdict task 7): the stdout headline is the
-# user-query surface only, and these write MAINTBENCH_r{N}.json with
-# their own round-over-round tracking.  The A/B protocol
-# (tools/ab_bench.py on total_queries_only) is unchanged — that total
-# never included these.
+# user-query surface only, and these write their own record to
+# $SPARK_GRAFT_MAINT_OUT (default MAINTBENCH.json at the repo root).
+# The A/B protocol (tools/ab_bench.py on total_queries_only) is
+# unchanged — that total never included these.
 MAINTENANCE = [
     "warehouse_compaction_certified",
     "warehouse_manifest_time_travel_certified",
@@ -165,20 +168,6 @@ MAINTENANCE = [
     "sql_changes_certified",
     "sql_history_certified",
 ]
-
-
-def _next_round() -> int:
-    """Infer the CURRENT round for the maintenance artifact name: the
-    driver writes BENCH_r{N}.json after this run, so N = newest + 1."""
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(here)
-        if (m := re.match(r"BENCH_r(\d+)\.json$", f))
-    ]
-    return (max(rounds) + 1) if rounds else 1
 
 
 def _calibrate(spark) -> float:
@@ -293,8 +282,10 @@ def main() -> None:
         "total_median": round(sum(m_medians.values()), 3),
         "sf": sf,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    maint_path = os.path.join(here, f"MAINTBENCH_r{_next_round():02d}.json")
+    maint_path = os.environ.get(
+        "SPARK_GRAFT_MAINT_OUT",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "MAINTBENCH.json"),
+    )
     with open(maint_path, "w") as fh:
         fh.write(json.dumps(maint) + "\n")
     print(f"# maintenance bench → {maint_path}: {json.dumps(maint)}", file=sys.stderr)
@@ -318,7 +309,7 @@ def main() -> None:
                 # value/total_median — kept for protocol continuity
                 "total_queries_only": total,
                 "total_median_queries_only": round(sum(medians.values()), 3),
-                # maintenance surface: tracked in MAINTBENCH_r{N}.json,
+                # maintenance surface: tracked in $SPARK_GRAFT_MAINT_OUT,
                 # summarized here so one line still tells the story
                 "maintenance_total": maint["value"],
                 # effective parallelism: $SPARK_GRAFT_CPUS drives both

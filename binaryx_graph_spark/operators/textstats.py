@@ -28,7 +28,8 @@ def spark_sql_tokens(col: str) -> str:
     ``F.expr``/``selectExpr`` replaces dozens of py4j round-trips of
     driver plan-build per expression tree (~1 ms each, measured r12/r13;
     the `_lit_vec` lesson generalized).  Same Catalyst expression as the
-    Column builder — pinned by tests/test_property.py parity test."""
+    Column builder — pinned by
+    tests/test_property.py::test_tokens_sql_string_matches_column_builder."""
     return f"filter(split(lower(`{col}`), '\\\\s+'), t -> t != '')"
 
 

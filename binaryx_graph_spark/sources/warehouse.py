@@ -35,6 +35,13 @@ commit whenever the target version's layout matches the live one (a new
 manifest that repeats an old file list); :meth:`vacuum` deletes exactly
 the files unreachable from the retained manifests.
 
+A read gets its schema from the manifest when the manifest pins one;
+otherwise the schema of the file set is inferred once per
+:class:`Warehouse` (one Spark footer job) and reused by every later read
+of the same files.  That memo cannot go stale: it is keyed by the exact
+tuple of data-file paths, and data files are immutable with unique
+job-UUID names (a commit, or :meth:`clear`, writes new ones).
+
 **Concurrent writers** are serialized optimistically (the Delta/Iceberg
 commit loop): the manifest is published with an atomic
 create-if-absent, so of two writers racing on version N exactly one
@@ -76,6 +83,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..model import EDGE_TABLES, NODE_TABLES
@@ -133,6 +141,9 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
         self.spark = spark
         self.root = Path(root)
         self.bloom_columns = bloom_columns or {}
+        # {table: (newest manifest version read, {data-file path tuple:
+        # schema})} — see _read_files_dv
+        self._schema_memo: dict[str, tuple[int, dict]] = {}
 
     def _path(self, table: str) -> str:
         return str(self.root / table)
@@ -157,6 +168,9 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
         """DETACH DELETE everything → drop and recreate empty tables."""
         if self.root.exists():
             shutil.rmtree(self.root)
+        # manifest versions restart at 0: drop the memo rather than let
+        # a higher old version keep the new ones from being memoized
+        self._schema_memo.clear()
         self.initialize()
 
     def read(
@@ -180,10 +194,9 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
         if version is not None:
             if version in mvs:
                 m = self._manifest(table, version)
-                df = self._read_manifest(table, version)
                 # THAT version's column mapping: time travel across a
                 # rename shows the old logical names
-                return self._to_logical(df.drop("_kb"), m)
+                return self._to_logical(self._read_manifest(table, m).drop("_kb"), m)
             vp = self._version_dir(table) / f"v{version:05d}"
             if vp.exists():
                 df = self.spark.read.parquet(str(vp))
@@ -198,10 +211,8 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
                 f"(available: {self.versions(table)})"
             )
         if mvs:
-            return self._to_logical(
-                self._read_manifest(table, mvs[-1]).drop("_kb"),
-                self._manifest(table, mvs[-1]),
-            )
+            m = self._manifest(table, mvs[-1])
+            return self._to_logical(self._read_manifest(table, m).drop("_kb"), m)
         if not (self.root / table).exists():
             raise FileNotFoundError(
                 f"warehouse table '{table}' not found under {self.root} — "
@@ -293,7 +304,7 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
             elif table in ALL_TABLES:
                 empty = self.spark.createDataFrame([], ALL_TABLES[table][0])
             else:
-                empty = self._read_manifest(table, v).limit(0).drop("_kb")
+                empty = self._read_manifest(table, m).limit(0).drop("_kb")
             empty = self._to_logical(empty, m)
             return (empty, {"files_total": total, "files_read": 0}) if with_diagnostics else empty
         df = self._read_files_dv(
@@ -447,16 +458,37 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
         KB of positions, so Catalyst broadcasts the anti-join; a file's
         physical row order is immutable (parquet), which is what makes
         positions a stable row identity.  Bucketed reads keep the
-        ``_kb`` partition column, exactly like the raw reader."""
+        ``_kb`` partition column, exactly like the raw reader.
+
+        With no pinned schema, each file set's schema is inferred (one
+        Spark footer job) on its first read only: the memo keys it by
+        the exact path tuple, which names immutable files, so an entry
+        never goes stale.  Reading a newer manifest of ``table`` than
+        any before drops every entry memoized until then, which bounds
+        the memo under a long-running writer."""
         base = self.root / table
         bucketed = "buckets" in m
         sch = self._schema_of(m) if schema == "__manifest__" else schema
-        rdr = self.spark.read if sch is None else self.spark.read.schema(sch)
+        version = m.get("version", -1)
+        memo_v, memo = self._schema_memo.setdefault(table, (-1, {}))
+        if version > memo_v:
+            memo = {}
+            self._schema_memo[table] = (version, memo)
 
         def _rd(files: list[str]) -> DataFrame:
+            key = tuple(files)
+            s = sch if sch is not None else memo.get(key)
+            rdr = self.spark.read if s is None else self.spark.read.schema(s)
             if bucketed:
-                return rdr.option("basePath", str(base)).parquet(*files)
-            return rdr.parquet(*files)
+                rdr = rdr.option("basePath", str(base))
+            df = rdr.parquet(*files)
+            if s is None:
+                # stored without _kb: Spark appends the partition column
+                # on top of a user schema, as on the manifest-pinned path
+                memo[key] = StructType(
+                    [f for f in df.schema.fields if f.name != "_kb"]
+                )
+            return df
 
         dvs = m.get("dvs", {})
         dv_pairs = [(r, p) for r, p in pairs if r in dvs]

@@ -139,7 +139,9 @@ class _CdfMixin:
                             return self.spark.createDataFrame(
                                 [], ALL_TABLES[table][0]
                             )
-                        return self._read_manifest(table, to_version).limit(0).drop("_kb")
+                        return self._read_manifest(
+                            table, self._manifest(table, to_version)
+                        ).limit(0).drop("_kb")
                     return self._read_files_dv(table, m, pairs).drop("_kb")
 
                 # both sides diff in PHYSICAL space, then surface under

@@ -920,7 +920,7 @@ class _DmlMixin:
             if evolved is not None:
                 df = self._align_columns(df, evolved.fields)
             if newest is not None:
-                stored = self._read_manifest(name, newest["version"])
+                stored = self._read_manifest(name, newest)
                 if evolved is not None:
                     stored = self._align_columns(stored, evolved.fields)
                 stored = stored.withColumn("_seq", F.lit(0))
@@ -1066,7 +1066,7 @@ class _DmlMixin:
                 # readable through their own manifests until vacuumed.
                 base_df = batch
                 if newest is not None:
-                    stored = self._read_manifest(name, newest["version"])
+                    stored = self._read_manifest(name, newest)
                     if evolved is not None:
                         stored = self._align_columns(stored, evolved.fields)
                     stored = stored.withColumn(

@@ -167,7 +167,7 @@ class _MaintenanceMixin:
         if newest["n_buckets"] == n_buckets:
             return newest["version"]
         df = (
-            self._read_manifest(table, newest["version"])
+            self._read_manifest(table, newest)
             .drop("_kb")
             .withColumn("_kb", self._key_bucket(table, n_buckets))
         )
@@ -541,7 +541,7 @@ class _MaintenanceMixin:
             if len(files) <= want and not (ccols and files) and not has_dv:
                 out[name] = (len(files), len(files))
                 continue
-            df = self._read_manifest(name, newest["version"])
+            df = self._read_manifest(name, newest)
             # keyless tables (future ALL_TABLES entries) still compact,
             # just without a co-location guarantee
             keys = MERGE_KEYS.get(name)

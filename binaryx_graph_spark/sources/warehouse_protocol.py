@@ -1039,15 +1039,15 @@ class _ProtocolMixin:
                 fields.append(f)
         return self._mapping_commit(table, m, StructType(fields), cm)
 
-    def _read_manifest(self, table: str, version: int) -> DataFrame:
-        """Read exactly the files a manifest lists. Bucketed manifests
+    def _read_manifest(self, table: str, m: dict) -> DataFrame:
+        """Read exactly the files manifest ``m`` (already loaded and
+        feature-gated by :meth:`_manifest`) lists. Bucketed manifests
         come back WITH the inferred ``_kb`` partition column — internal
         callers prune/repartition on it; :meth:`read` drops it. Flat
         manifests read their root files directly.  A manifest carrying
         an evolved schema pins it on the reader (older files' missing
         columns read as nulls; Spark appends the ``_kb`` partition
         column on top)."""
-        m = self._manifest(table, version)
         base = self.root / table
         schema = self._schema_of(m)
         if "buckets" in m:

@@ -56,6 +56,19 @@ def test_cypher_and_stats(eng):
     assert stats["functions"] >= 6 and stats["calls"] >= 5
 
 
+def test_rereads_submit_no_jobs(eng, spark):
+    """A warehouse read infers a file set's schema once per Warehouse:
+    re-constructing a table read or stats after the first submits no
+    Spark job (tests/test_warehouse_schema_memo.py checks the rows)."""
+    eng.table("functions")
+    eng.stats()
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup())
+    eng.table("functions")
+    eng.stats()
+    assert set(st.getJobIdsForGroup()) - before == set()
+
+
 def test_dedup_passthrough(eng, spark):
     df = spark.createDataFrame(
         [(1, "aaa bbb ccc"), (2, "aaa bbb ccc"), (3, "zzz")], "id int, text string"

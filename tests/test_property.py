@@ -76,3 +76,39 @@ def test_morton2_column_matches_python_reference(spark):
     }
     assert got == {(x, y): _morton_py(x, y) for x, y in rows}
     assert len(set(got.values())) == len(rows)
+
+
+def test_tokens_sql_string_matches_column_builder(spark):
+    """tokens('text') (one parsed SQL string) == tokens(F.col('text'))
+    (the Column builder) on an adversarial corpus: tabs, newlines, runs
+    of spaces, leading/trailing whitespace, NBSP, mixed-case non-ASCII,
+    the empty string and NULL."""
+    from pyspark.sql import functions as F
+
+    from binaryx_graph_spark.operators.textstats import tokens
+
+    corpus = [
+        "plain words here",
+        "tab\tseparated\t\twords",
+        "new\nline\r\nand\n\ncarriage",
+        "runs   of     spaces",
+        "   leading and trailing   ",
+        "\t\n mixed \x0b\f whitespace \n\t",
+        "nbsp\u00a0glued\u00a0 words",
+        "MiXeD CaSe ÄÖÜ straße İstanbul ΣΊΣΥΦΟΣ",
+        "",
+        " ",
+        None,
+    ]
+    df = spark.createDataFrame(list(enumerate(corpus)), "i int, text string")
+    rows = df.select(
+        "i", tokens("text").alias("sql"), tokens(F.col("text")).alias("col")
+    ).collect()
+    assert len(rows) == len(corpus)
+    for r in rows:
+        assert r["sql"] == r["col"], corpus[r["i"]]
+    got = {r["i"]: r["sql"] for r in rows}
+    assert got[1] == ["tab", "separated", "words"]
+    assert got[4] == ["leading", "and", "trailing"]
+    assert got[6] == ["nbsp\u00a0glued\u00a0", "words"]  # NBSP is not \s
+    assert got[8] == [] and got[9] == [] and got[10] is None
