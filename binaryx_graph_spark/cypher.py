@@ -59,6 +59,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .plans.lineage import frontier_levels
+
 # ---------------------------------------------------------------- schema map
 
 NODE_LABELS: dict[str, tuple[str, str]] = {
@@ -878,12 +880,6 @@ class CypherParser:
 # ----------------------------------------------------------------- compiler
 
 
-def _cy_ckpt(df: DataFrame) -> DataFrame:
-    """Persist + cut lineage between path-enumeration levels (same role
-    as operators/traverse._ckpt: plan depth stays O(1) per level)."""
-    return df.localCheckpoint(eager=True)
-
-
 def _path_accessor_usage(q: Query) -> dict[str, set[str]]:
     """Which path accessors each ``path =`` variable needs downstream:
     ``nodes`` (nodes(path) / bare RETURN path), ``props`` (node name or
@@ -1313,7 +1309,8 @@ class CypherCompiler:
 
         Same semantics as operators/traverse.enumerate_paths: no repeated
         RELATIONSHIP within a path (node revisits allowed — cycles show
-        up), level-by-level frontier joins with per-level localCheckpoint.
+        up), level-by-level frontier joins through
+        ``plans.lineage.frontier_levels``.
         ``scope`` (from a lowered ALL(n IN nodes(path) WHERE EXISTS(
         (b)-[...]->(n)))) constrains enumeration to b's subgraph DURING
         the iteration — each frontier extension joins the scope-filtered
@@ -1431,35 +1428,21 @@ class CypherCompiler:
             )
             edge = edge.join(pairs, edge._to == F.col("__sn")).drop("__sn")
 
-        edge = _cy_ckpt(edge)
-        base_cols = list(cur.columns)
-        if pat.shortest:
-            if cycle:
-                raise ValueError(
-                    "cypher: shortestPath over a cycle pattern is unsupported "
-                    "(use the plain path pattern — the engine enumerates cycles)"
-                )
-            out = self._shortest_levels(
-                cur, edge, base_cols, (nodes_c, offs_c, eids_c, end_c),
-                lo, hi, scope_key, len_c,
+        if pat.shortest and cycle:
+            raise ValueError(
+                "cypher: shortestPath over a cycle pattern is unsupported "
+                "(use the plain path pattern — the engine enumerates cycles)"
             )
-            if end.var in bound:
-                out = out.filter(F.col(end_c) == F.col(self._key_col(end.var, bound[end.var])))
-            else:
-                end_df = self._node_df(end.var, "Function")
-                out = out.join(end_df, F.col(end_c) == F.col(f"{end.var}__uid"))
-                bound[end.var] = "Function"
-                for p, v in end.props.items():
-                    out = out.filter(self._prop_col(end.var, p, bound) == F.lit(v))
-            self._path_vars[pv] = {"nodes": nodes_c, "offs": offs_c, "len": len_c}
-            return out.drop(eids_c, end_c)
-        frontier = _cy_ckpt(cur)
-        levels: list[DataFrame] = []
+        edge = edge.localCheckpoint(eager=True)
+        base_cols = list(cur.columns)
         acc = tuple(c for c in (nodes_c, offs_c, eids_c, end_c) if c in base_cols)
-        for depth in range(1, hi + 1):
-            cond = F.col(end_c) == edge["_from"]
-            if scope_key is not None:
-                cond = cond & (F.col(scope_key) == edge["__sb"])
+        cond = F.col(end_c) == edge["_from"]
+        if scope_key is not None:
+            cond = cond & (F.col(scope_key) == edge["__sb"])
+        first = cur.localCheckpoint(eager=True)
+        if pat.shortest:
+            levels = self._shortest_levels(first, edge, cond, base_cols, acc, lo, hi, len_c)
+        else:
             sel = [F.col(c) for c in base_cols if c not in acc]
             sel.append(F.col("_to").alias(end_c))
             if need_nodes:
@@ -1475,32 +1458,20 @@ class CypherCompiler:
             if need_offs:
                 sel.append(F.array_append(F.col(offs_c), F.col("_off")).alias(offs_c))
             sel.append(F.array_append(F.col(eids_c), F.col("_eid")).alias(eids_c))
-            ext = (
-                frontier.join(edge, cond)
-                .filter(~F.array_contains(F.col(eids_c), F.col("_eid")))
-                .select(*sel)
-                .select(*base_cols)  # restore column order for unionByName
-            )
-            # Per-level checkpoint + emptiness probe EXCEPT at the final
-            # depth (r13, settles VERDICT r12 #3): a non-final ext has
-            # TWO consumers (levels output + next frontier), so leaving
-            # it lazy re-executes its join per consumer — the r12
-            # cadence-2 variant did exactly that for odd levels and the
-            # driver's cold run measured cypher_varlen_rel_pred 1.14×
-            # slower (traverse.enumerate_paths measured the same shape
-            # 1.06× slower and never adopted cadence-2).  The FINAL
-            # level has ONE consumer (the output union), and the loop
-            # ends regardless of its emptiness — its eager checkpoint
-            # and isEmpty were 2 jobs plus a full materialization pass
-            # of the deepest (largest) path frame, for nothing.
-            if depth < hi:
-                ext = _cy_ckpt(ext)
-                if ext.isEmpty():
-                    break
-            if depth >= lo:
-                levels.append(ext.withColumn(len_c, F.lit(depth)))
-            frontier = ext
 
+            def step(frontier: DataFrame) -> DataFrame:
+                return (
+                    frontier.join(edge, cond)
+                    .filter(~F.array_contains(F.col(eids_c), F.col("_eid")))
+                    .select(*sel)
+                    .select(*base_cols)  # restore column order for unionByName
+                )
+
+            levels = [
+                ext.withColumn(len_c, F.lit(depth))
+                for depth, ext in frontier_levels(first, step, hi)
+                if depth >= lo
+            ]
         if levels:
             out = levels[0]
             for lv in levels[1:]:
@@ -1525,32 +1496,35 @@ class CypherCompiler:
         return out.drop(eids_c, end_c)
 
     def _shortest_levels(
-        self, cur: DataFrame, edge: DataFrame, base_cols: list[str],
-        acc: tuple[str, str, str, str], lo: int, hi: int,
-        scope_key: str | None, len_c: str,
-    ) -> DataFrame:
-        """shortestPath BFS: min-depth frontier with per-(row, node)
-        visited pruning, ONE deterministic path per endpoint pair (ties
-        broken on the lexicographically smallest uid sequence, then the
-        smallest edge-offsets array — a TOTAL order, so the surviving
-        path is fully determined; Neo4j picks an arbitrary shortest
-        path, we pick a stable one)."""
+        self, first: DataFrame, edge: DataFrame, cond: Column, base_cols: list[str],
+        acc: tuple[str, ...], lo: int, hi: int, len_c: str,
+    ) -> list[DataFrame]:
+        """shortestPath BFS levels lo..hi: min-depth frontier with
+        per-(row, node) visited pruning, ONE deterministic path per
+        endpoint pair (ties broken on the lexicographically smallest uid
+        sequence, then the smallest edge-offsets array — a TOTAL order,
+        so the surviving path is fully determined; Neo4j picks an
+        arbitrary shortest path, we pick a stable one)."""
         from pyspark.sql.window import Window
 
         nodes_c, offs_c, eids_c, end_c = acc
         idcols = [c for c in base_cols if c not in acc]
-        visited = _cy_ckpt(cur.select(*idcols, F.col(end_c).alias("_to")).distinct())
-        frontier = _cy_ckpt(cur)
-        levels: list[DataFrame] = []
-        for depth in range(1, hi + 1):
-            cond = F.col(end_c) == edge["_from"]
-            if scope_key is not None:
-                cond = cond & (F.col(scope_key) == edge["__sb"])
+        visited = first.select(
+            *idcols, F.col(end_c).alias("_to")
+        ).distinct().localCheckpoint(eager=True)
+        key = F.array_join(F.transform(F.col(nodes_c), lambda x: x["uid"]), "→")
+        # TOTAL order (r13, ADVICE): multi-edges (same src/dst,
+        # different offset) tie on the uid sequence; the offsets
+        # array breaks the tie so the one surviving row is fully
+        # determined, not a shuffle-fetch-order accident.
+        w = Window.partitionBy(*idcols, end_c).orderBy(key.asc(), F.col(offs_c).asc())
+
+        def step(frontier: DataFrame) -> DataFrame:
             ext = (
                 frontier.join(edge, cond)
                 .join(visited, idcols + ["_to"], "left_anti")
                 .select(
-                    *[F.col(c) for c in base_cols if c not in acc],
+                    *idcols,
                     F.col("_to").alias(end_c),
                     F.array_append(
                         F.col(nodes_c),
@@ -1565,39 +1539,20 @@ class CypherCompiler:
                 )
                 .select(*base_cols)
             )
-            key = F.array_join(F.transform(F.col(nodes_c), lambda x: x["uid"]), "→")
-            # TOTAL order (r13, ADVICE): multi-edges (same src/dst,
-            # different offset) tie on the uid sequence; the offsets
-            # array breaks the tie so the one surviving row is fully
-            # determined, not a shuffle-fetch-order accident.
-            w = Window.partitionBy(*idcols, end_c).orderBy(key.asc(), F.col(offs_c).asc())
-            ext = (
+            return (
                 ext.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            # EVERY level checkpoints here (r13, ADVICE — unlike the
-            # var-length loop's cadence-2): ext has THREE consumers
-            # (levels output, visited union, next frontier), and the
-            # consumer-count rule the other loops cite says a lazy
-            # frame re-executed per consumer must be materialized —
-            # here it also guarantees all three see the SAME window
-            # tie winners.
-            ext = _cy_ckpt(ext)
-            if ext.isEmpty():
-                break
+
+        levels: list[DataFrame] = []
+        for depth, ext in frontier_levels(first, step, hi):
             if depth >= lo:
                 levels.append(ext.withColumn(len_c, F.lit(depth)))
             visited = visited.unionByName(
                 ext.select(*idcols, F.col(end_c).alias("_to"))
             )
-            frontier = ext
-        if levels:
-            out = levels[0]
-            for lv in levels[1:]:
-                out = out.unionByName(lv)
-            return out
-        return cur.filter(F.lit(False)).withColumn(len_c, F.lit(0))
+        return levels
 
     # --- helpers
     def _node_df(self, var: str, label: str) -> DataFrame:
@@ -1857,7 +1812,7 @@ class CypherCompiler:
         lo, hi = varlen
         if not (1 <= lo <= hi <= 10):
             raise ValueError("cypher: *lo..hi must satisfy 1 <= lo <= hi <= 10")
-        edges = _cy_ckpt(
+        edges = (
             self.tables["calls"]
             .select(
                 F.col("src_uid").alias("__esrc"),
@@ -1865,15 +1820,16 @@ class CypherCompiler:
                 F.concat_ws("⊕", "src_uid", "dst_uid", "offset").alias("__eid"),
             )
             .distinct()
+            .localCheckpoint(eager=True)
         )
-        cur = edges.select(
+        one = edges.select(
             F.col("__esrc").alias("__src"),
             F.col("__edst").alias("__dst"),
             F.array("__eid").alias("__eids"),
         )
-        acc = cur if lo <= 1 else None
-        for depth in range(2, hi + 1):
-            cur = (
+
+        def step(cur: DataFrame) -> DataFrame:
+            return (
                 cur.join(edges, F.col("__dst") == F.col("__esrc"))
                 .filter(~F.array_contains(F.col("__eids"), F.col("__eid")))
                 .select(
@@ -1882,15 +1838,12 @@ class CypherCompiler:
                     F.array_append(F.col("__eids"), F.col("__eid")).alias("__eids"),
                 )
             )
-            # per-level checkpoint stays: cur feeds both the next level
-            # and the acc union (traverse.py's consumer-count rule)
-            cur = _cy_ckpt(cur)
-            if cur.isEmpty():
-                break
-            if depth >= lo:
-                acc = cur if acc is None else acc.unionByName(cur)
-        if acc is None:
-            acc = cur.filter(F.lit(False))
+
+        # level d of the loop holds the paths of length d + 1
+        acc = one if lo <= 1 else one.filter(F.lit(False))
+        for depth, cur in frontier_levels(one, step, hi - 1):
+            if depth + 1 >= lo:
+                acc = acc.unionByName(cur)
         return acc.select("__src", "__dst")
 
     def _varlen_pairs(self, varlen: tuple[int, int]) -> DataFrame:

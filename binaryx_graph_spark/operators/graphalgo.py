@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lineage import frontier_levels
+
 PAGERANK_SCALE = 10**12  # int64 rank units: 1.0 == 1e12 (85×scale << 2^63)
 
 
@@ -49,9 +51,9 @@ def pagerank_fixed(
     independent of partitioning, shuffle order, and engine.
 
     Scale: edges shuffle once per iteration on ``src`` (join) then
-    ``dst`` (aggregate); ranks are node-cardinality.  Each round ends in
-    ``localCheckpoint`` to cut lineage — at cluster scale this becomes a
-    persisted-table checkpoint every few rounds.
+    ``dst`` (aggregate); ranks are node-cardinality.  Every second round
+    and the last end in ``localCheckpoint`` to cut lineage — at cluster
+    scale this becomes a persisted-table checkpoint every few rounds.
 
     Simple-graph semantics: duplicate (src, dst) rows are collapsed, so
     a repeated call edge carries no extra weight (matches the oracle's
@@ -1054,24 +1056,16 @@ def scc_bounded(
         .localCheckpoint(eager=True)
     )
     reach = nodes.select(F.col("v").alias("u"), F.col("v").alias("w"))
-    frontier = reach
-    for _d in range(max_depth):
-        frontier = (
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(edges, frontier.w == edges.src)
             .select("u", F.col("dst").alias("w"))
             .distinct()
             .join(reach, ["u", "w"], "left_anti")
         )
-        # the FINAL round's frontier has ONE consumer (the reach union
-        # below; no later round reads it) and the loop ends regardless
-        # of its emptiness — skip its eager checkpoint + isEmpty
-        # (2 jobs + one materialization pass of the largest frontier,
-        # r13).  Non-final rounds keep both: the frontier feeds the
-        # next round's join AND the reach union.
-        if _d < max_depth - 1:
-            frontier = frontier.localCheckpoint(eager=True)
-            if frontier.isEmpty():
-                break
+
+    for _depth, frontier in frontier_levels(reach, step, max_depth):
         # reach stays materialized per round: it is re-read by EVERY
         # later round's anti-join and twice by the final mutual
         # semi-join — a lazy-union variant re-scanned the union per
@@ -1371,16 +1365,15 @@ def topo_layers(edges: DataFrame, *, max_depth: int = 10) -> DataFrame:
     layer = scc.select(F.col("scc_id").alias("c")).distinct().withColumn(
         "layer", F.lit(0).cast("long")
     )
-    frontier = layer
-    for _d in range(max_depth):
-        frontier = (
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(cedges, frontier.c == cedges.csrc)
             .groupBy(F.col("cdst").alias("c"))
             .agg((F.max("layer") + 1).alias("layer"))
-            .localCheckpoint(eager=True)
         )
-        if frontier.isEmpty():
-            break
+
+    for _depth, frontier in frontier_levels(layer, step, max_depth):
         layer = (
             layer.unionByName(frontier)
             .groupBy("c")

@@ -10,10 +10,10 @@ Scale design:
   the frontier is small, an ordinary shuffled hash join when it isn't
   (Catalyst/AQE decides; we hint broadcast only for the seed level)
 - visited-set left-anti joins keep frontiers minimal (BFS, not walks)
-- per-level ``localCheckpoint(eager)`` truncates lineage so plan depth
-  stays O(1) per level rather than O(levels)
-- early exit on empty frontier (one lightweight count per level —
-  ``isEmpty`` on Spark 4 avoids a full count)
+- every loop runs through ``plans.lineage.frontier_levels``: each
+  non-final level is ``localCheckpoint``-ed (plan depth stays O(1) per
+  level rather than O(levels)) and probed with ``isEmpty`` for an early
+  exit; the final level is neither
 - path enumeration carries array columns; Cypher's no-repeated-
   RELATIONSHIP rule is enforced via an edge-id membership check
   (call_path_analyzer.rs default semantics; SURVEY.md §7.3 #1)
@@ -26,10 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Persist + cut lineage between BFS levels."""
-    return df.localCheckpoint(eager=True)
+from ..plans.lineage import frontier_levels
 
 
 def _edges(calls: DataFrame, direction: str) -> DataFrame:
@@ -61,35 +58,24 @@ def reachable(
         )
     # materialize the (filtered) edge list ONCE — otherwise every BFS
     # level re-executes the full edge lineage (scan + distinct + joins)
-    edges = _ckpt(edges)
+    edges = edges.localCheckpoint(eager=True)
 
-    frontier = _ckpt(seeds.select("uid").distinct())
+    frontier = seeds.select("uid").distinct().localCheckpoint(eager=True)
     # visited starts EMPTY: Cypher `*1..N` reports the seed itself when a
     # cycle returns to it (DISTINCT callee includes f). Reported nodes are
     # then pruned from later frontiers — min-depth BFS.
     visited = frontier.limit(0)
     out: DataFrame | None = None
 
-    for depth in range(1, max_depth + 1):
-        nxt = (
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(edges, frontier.uid == edges._from)
             .select(F.col("_to").alias("uid"))
             .distinct()
+            .join(visited, "uid", "left_anti")
         )
-        # per-level checkpoint stays for NON-final levels: nxt has
-        # MULTIPLE consumers (next level's join, every later level's
-        # anti-join via visited, and the output union) — leaving it
-        # lazy re-executes its shuffles in each consumer (measured:
-        # MORE jobs, 25 → 31, and slower).  The FINAL level's nxt has
-        # ONE consumer (the output union; visited/frontier are never
-        # read again) and the loop ends regardless of its emptiness —
-        # skip its eager checkpoint + isEmpty (2 jobs + one
-        # materialization pass, r13).
-        nxt = nxt.join(visited, "uid", "left_anti")
-        if depth < max_depth:
-            nxt = _ckpt(nxt)
-            if nxt.isEmpty():
-                break
+
+    for depth, nxt in frontier_levels(frontier, step, max_depth):
         level = nxt.withColumn("depth", F.lit(depth))
         out = level if out is None else out.unionByName(level)
         # visited is a union of the checkpointed level frames: lineage
@@ -98,7 +84,6 @@ def reachable(
         # (addendum 31's betweenness fix; measured 2.20 s → 1.88 s min,
         # 3.17 s → 2.23 s med at sf0.1, output bit-identical)
         visited = visited.unionByName(nxt)
-        frontier = nxt
 
     if out is None:
         schema_src = seeds.sparkSession
@@ -158,7 +143,7 @@ def enumerate_paths(
     e = e.join(fn, F.col("_to") == fn._fuid).select(
         "_from", "_to", "_off", "_eid", "_fname", "_faddr"
     )
-    e = _ckpt(e)  # one materialization; levels re-join this, not the lineage
+    e = e.localCheckpoint(eager=True)  # levels re-join this, not the lineage
 
     seed_nodes = seeds.select("uid").distinct().join(fn, F.col("uid") == fn._fuid).select(
         F.col("uid").alias("start_uid"),
@@ -174,11 +159,8 @@ def enumerate_paths(
             members.select(F.col("uid").alias("start_uid")), "start_uid", "left_semi"
         )
 
-    frontier = _ckpt(seed_nodes)
-    levels: list[DataFrame] = []
-
-    for depth in range(1, max_depth + 1):
-        ext = (
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, frontier.end_uid == e._from)
             .filter(~F.array_contains("_eids", F.col("_eid")))
             .select(
@@ -188,24 +170,12 @@ def enumerate_paths(
                 F.array_append("node_addresses", F.col("_faddr")).alias("node_addresses"),
                 F.array_append("edge_offsets", F.col("_off")).alias("edge_offsets"),
                 F.array_append("_eids", F.col("_eid")).alias("_eids"),
-                F.lit(depth).alias("path_length"),
+                (F.col("path_length") + 1).alias("path_length"),
             )
         )
-        # per-level checkpoint stays for NON-final levels: ext feeds
-        # BOTH the output union and the next level's join, and the
-        # path-array rows grow with depth — lazy odd levels re-execute
-        # that growing work in every consumer (measured 1.06× slower
-        # with a cadence-2 variant).  The FINAL level has one consumer
-        # (the output union) and the loop ends regardless — its eager
-        # checkpoint + isEmpty were 2 jobs plus a materialization pass
-        # of the deepest (largest) path frame for nothing (r13).
-        if depth < max_depth:
-            ext = _ckpt(ext)
-            if ext.isEmpty():
-                break
-        levels.append(ext)
-        frontier = ext
 
+    first = seed_nodes.localCheckpoint(eager=True)
+    levels = [ext for _depth, ext in frontier_levels(first, step, max_depth)]
     if not levels:
         return seed_nodes.sparkSession.createDataFrame(
             [],
@@ -254,26 +224,27 @@ def indirect_recursion(
     loop+loop at length 2 repeats the relationship).  Length-1
     recursion is G6's surface (:func:`direct_recursion`).
     """
-    edges = _ckpt(
-        _edges(calls, "out").filter(F.col("_from") != F.col("_to"))
+    edges = (
+        _edges(calls, "out")
+        .filter(F.col("_from") != F.col("_to"))
+        .localCheckpoint(eager=True)
     )
-    pairs = seeds.select(F.col("uid").alias("origin"), F.col("uid").alias("cur"))
-    pairs = _ckpt(pairs)
-    hits: list[DataFrame] = []
-    for depth in range(1, max_depth + 1):
-        pairs = (
+    pairs = seeds.select(
+        F.col("uid").alias("origin"), F.col("uid").alias("cur")
+    ).localCheckpoint(eager=True)
+
+    def step(pairs: DataFrame) -> DataFrame:
+        return (
             pairs.join(edges, pairs.cur == edges._from)
             .select("origin", F.col("_to").alias("cur"))
             .distinct()
         )
-        # per-level checkpoint stays: pairs feeds the next level AND the
-        # depth-tagged hits filter (see reachable's consumer-count rule)
-        pairs = _ckpt(pairs)
-        if pairs.isEmpty():
-            break
+
+    hits: list[DataFrame] = []
+    for depth, level in frontier_levels(pairs, step, max_depth):
         if depth >= 2:
             hits.append(
-                pairs.filter(F.col("origin") == F.col("cur")).select(
+                level.filter(F.col("origin") == F.col("cur")).select(
                     F.col("origin").alias("uid"), F.lit(depth).alias("cycle_length")
                 )
             )

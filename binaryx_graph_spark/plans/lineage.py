@@ -30,7 +30,41 @@ anything join-recursive).
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 from pyspark.sql import DataFrame
+
+
+def frontier_levels(
+    first: DataFrame, step: Callable[[DataFrame], DataFrame], max_depth: int
+) -> Iterator[tuple[int, DataFrame]]:
+    """The driver-side BFS loop of every frontier-shaped operator: yield
+    ``(depth, level)`` for depth 1..max_depth, level d = ``step(level
+    d-1)``, level 0 = ``first`` as given.  The caller's loop body runs
+    before the next ``step``, so a step closing over caller state (a
+    visited set) sees its update.
+
+    Each non-final level is eagerly ``localCheckpoint``-ed and probed
+    with ``isEmpty``; the first empty one ends the loop unyielded, and
+    ``step`` is not called again.  Such a level feeds the next step AND
+    the caller, and a lazy frame re-executes per consumer: left lazy,
+    reachable took 31 jobs instead of 25, and checkpointing every second
+    level measured 1.06× (enumerate_paths) to 1.14×
+    (cypher_varlen_rel_pred) slower.
+
+    The final level is yielded lazily, possibly empty: its only
+    consumer is the caller's output, so a checkpoint and probe there
+    cost 2 jobs and a pass over the deepest level for nothing.
+    Skipping them measured graph_longest_paths_scaled 1.56×,
+    cypher_varlen_rel_pred 1.39× and graph_scc 1.18× faster."""
+    level = first
+    for depth in range(1, max_depth + 1):
+        level = step(level)
+        if depth < max_depth:
+            level = level.localCheckpoint(eager=True)
+            if level.isEmpty():
+                return
+        yield depth, level
 
 
 def checkpoint_cut(df: DataFrame) -> DataFrame:

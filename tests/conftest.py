@@ -30,7 +30,8 @@ def spark():
 # The slow set is data, not decorators: tests/slow_tests.txt, one
 # file.py::test nodeid per line (measured ≥8 s each; regenerate with
 # `pytest --durations=0` and re-rank).  A nodeid that disappears from the
-# tree is reported loudly below rather than silently ignored.
+# tree fails a full-suite collection (a renamed slow test would otherwise
+# move silently into the fast tier).
 _SLOW_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "slow_tests.txt")
 
 
@@ -59,6 +60,6 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
     missing = slow - seen
     if missing and len(items) > 100:  # full-suite collections only
-        import warnings
-
-        warnings.warn(f"slow_tests.txt entries not collected: {sorted(missing)}")
+        raise pytest.UsageError(
+            f"tests/slow_tests.txt entries match no collected test: {sorted(missing)}"
+        )

@@ -12,6 +12,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from binaryx_graph_spark.cypher import cypher
+from binaryx_graph_spark.operators.traverse import enumerate_paths
 from binaryx_graph_spark.queries.ingest_demo import graph_tables
 
 
@@ -498,7 +499,8 @@ def test_optional_chained_on_optional_null_anchor(spark, t):
 def test_shortest_path_multiedge_total_tiebreak(spark):
     """Multi-edges (same src/dst, different offset) tie on the uid
     sequence; the offsets array breaks the tie (r13 ADVICE) — the ONE
-    surviving path must carry the smallest offsets array, every run."""
+    surviving path must carry the smallest offsets array, every run.
+    Also pins the exact depth bound of the path and shortestPath loops."""
     fns = spark.createDataFrame(
         [("u1", "main", "0x1"), ("u2", "x", "0x2")],
         "uid string, name string, address string",
@@ -521,3 +523,33 @@ def test_shortest_path_multiedge_total_tiebreak(spark):
         assert [(tuple(x.names), tuple(x.offs), x.len) for x in r] == [
             (("main", "x"), ("3",), 1)
         ]
+
+    # Exact depth bound: on the chain c1→c2→c3→c4 the only c1→c4 match
+    # of *2..3 has length hi, i.e. it is found by the loop's final
+    # (un-checkpointed, un-probed) level.
+    chain = {
+        "functions": spark.createDataFrame(
+            [(f"c{i}", f"c{i}", f"0x{i}") for i in range(1, 5)],
+            "uid string, name string, address string",
+        ),
+        "calls": spark.createDataFrame(
+            [(f"c{i}", f"c{i + 1}", str(i)) for i in range(1, 4)],
+            "src_uid string, dst_uid string, offset string",
+        ),
+    }
+    ret = """
+        WHERE a.name = 'c1' AND b.name = 'c4'
+        RETURN [n in nodes(p) | n.name] AS names, length(p) AS len
+    """
+    paths = cypher(chain, "MATCH p = (a:Function)-[:CALLS*2..3]->(b:Function)" + ret)
+    native = enumerate_paths(
+        chain["calls"], chain["functions"],
+        spark.createDataFrame([("c1",)], "uid string"), max_depth=3,
+    ).filter("path_length >= 2 AND end_uid = 'c4'")
+    got = [(tuple(x.names), x.len) for x in paths.collect()]
+    assert got == [(tuple(x.node_names), x.path_length) for x in native.collect()]
+    assert got == [(("c1", "c2", "c3", "c4"), 3)]
+    sp = cypher(chain, "MATCH p = shortestPath((a:Function)-[:CALLS*2..3]->(b:Function))" + ret)
+    assert [(tuple(x.names), x.len) for x in sp.collect()] == [
+        (("c1", "c2", "c3", "c4"), 3)
+    ]

@@ -7,14 +7,15 @@ dominates planning (SCALE.md addendum 32).  These tests pin (a) the
 helper actually resets stats, (b) values survive the rebuild untouched,
 (c) the distributed CC loop — the worst measured offender (stats bits
 DOUBLED per round) — now converges on a long-diameter graph that
-previously planning-stalled.
+previously planning-stalled.  The last test pins the frontier-loop
+rule of ``frontier_levels``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from binaryx_graph_spark.plans.lineage import checkpoint_cut
+from binaryx_graph_spark.plans.lineage import checkpoint_cut, frontier_levels
 
 
 def _bits(df) -> int:
@@ -64,3 +65,50 @@ def test_cc_long_chain_distributed_converges(spark):
     rows = out.collect()
     assert len(rows) == 257
     assert {r["cluster_id"] for r in rows} == {0}  # one chain, min-id root
+
+
+def _is_checkpoint_scan(df) -> bool:
+    return df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+
+
+def test_frontier_levels_checkpoint_rule(spark):
+    # chain 0→1→2→3: level d holds {d}; level 4 is the first empty one
+    edges = spark.range(3).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    calls = []
+
+    def step(frontier):
+        calls.append(len(calls) + 1)
+        return frontier.join(edges, frontier.v == edges.src).select(
+            F.col("dst").alias("v")
+        )
+
+    first = spark.range(1).select(F.col("id").alias("v"))
+
+    # max_depth beyond the chain: levels 1..3 are non-final, all are
+    # checkpoint scans; the empty level 4 is probed, not yielded, and
+    # step is never called after it
+    got = []
+    for depth, level in frontier_levels(first, step, 6):
+        assert _is_checkpoint_scan(level)
+        got.append((depth, [r.v for r in level.collect()]))
+    assert got == [(1, [1]), (2, [2]), (3, [3])]
+    assert calls == [1, 2, 3, 4]
+
+    # max_depth == 3: the final level is yielded lazily (no checkpoint)
+    calls.clear()
+    got = list(frontier_levels(first, step, 3))
+    assert [d for d, _ in got] == [1, 2, 3]
+    assert all(_is_checkpoint_scan(lv) for _, lv in got[:-1])
+    assert not _is_checkpoint_scan(got[-1][1])
+    assert [r.v for r in got[-1][1].collect()] == [3]
+    assert calls == [1, 2, 3]
+
+    # an empty FINAL level is never probed, so it is still yielded
+    calls.clear()
+    got = list(frontier_levels(first, step, 4))
+    assert [d for d, _ in got] == [1, 2, 3, 4]
+    assert not _is_checkpoint_scan(got[-1][1])
+    assert got[-1][1].collect() == []
+    assert calls == [1, 2, 3, 4]

@@ -48,6 +48,10 @@ def test_reachable_cycle_reports_seed(spark):
     out = {r["uid"]: r["depth"] for r in reachable(calls, seeds, max_depth=5).collect()}
     # a→b→c→a: seed re-reached at its cycle length
     assert out == {"b": 1, "c": 2, "a": 3}
+    # exact bound: only the final (un-checkpointed, un-probed) level
+    # re-reaches the seed
+    out3 = {r["uid"]: r["depth"] for r in reachable(calls, seeds, max_depth=3).collect()}
+    assert out3 == {"b": 1, "c": 2, "a": 3}
 
 
 def test_paths_depth_bound_respected(spark):
@@ -59,6 +63,10 @@ def test_paths_depth_bound_respected(spark):
     p3 = enumerate_paths(calls, fns, seeds, max_depth=4).collect()
     longest = max(r["path_length"] for r in p3)
     assert longest == 3  # a→b→c→a exhausts the edges; no 4th hop possible
+    # exact bound: the length-3 path exists only in the final level
+    p3 = enumerate_paths(calls, fns, seeds, max_depth=3).collect()
+    assert max(r["path_length"] for r in p3) == 3
+    assert [list(r["node_names"]) for r in p3 if r["path_length"] == 3] == [["a", "b", "c", "a"]]
 
 
 def test_indirect_recursion_direction(spark):
@@ -66,6 +74,10 @@ def test_indirect_recursion_direction(spark):
     seeds = spark.createDataFrame([("a",), ("b",), ("c",)], "uid string")
     out = {r["uid"]: r["cycle_length"] for r in indirect_recursion(calls, seeds, max_depth=10).collect()}
     assert out == {"a": 3, "b": 3, "c": 3}
+    # exact bound: the cycles close only in the final level
+    out3 = {r["uid"]: r["cycle_length"] for r in indirect_recursion(calls, seeds, max_depth=3).collect()}
+    assert out3 == {"a": 3, "b": 3, "c": 3}
+    assert indirect_recursion(calls, seeds, max_depth=2).count() == 0
 
 
 def test_streaming_watermark_drops_late_rows(spark, tmp_path):
