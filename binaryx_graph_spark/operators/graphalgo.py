@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.lineage import frontier_levels
+from ..plans.lineage import fixed_rounds, frontier_levels
 
 PAGERANK_SCALE = 10**12  # int64 rank units: 1.0 == 1e12 (85×scale << 2^63)
 
@@ -51,9 +51,10 @@ def pagerank_fixed(
     independent of partitioning, shuffle order, and engine.
 
     Scale: edges shuffle once per iteration on ``src`` (join) then
-    ``dst`` (aggregate); ranks are node-cardinality.  Every second round
-    and the last end in ``localCheckpoint`` to cut lineage — at cluster
-    scale this becomes a persisted-table checkpoint every few rounds.
+    ``dst`` (aggregate); ranks are node-cardinality.  The rounds run
+    through ``plans.lineage.fixed_rounds``, which cuts lineage every
+    second round — at cluster scale this becomes a persisted-table
+    checkpoint every few rounds.
 
     Simple-graph semantics: duplicate (src, dst) rows are collapsed, so
     a repeated call edge carries no extra weight (matches the oracle's
@@ -96,32 +97,23 @@ def pagerank_fixed(
     base = (15 * init) // 100
 
     ranks = nodes.select("v", F.lit(init).cast("long").alias("rank"))
-    for i in range(iters):
+
+    def step(ranks: DataFrame) -> DataFrame:
         inflow = (
             edges_deg.join(ranks, edges_deg.src == ranks.v)
             .select(F.col("dst").alias("v"), F.expr("rank div deg").alias("c"))
             .groupBy("v")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = nodes.join(inflow, "v", "left").select(
+        return nodes.join(inflow, "v", "left").select(
             "v",
             (
                 F.lit(base)
                 + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")
             ).alias("rank"),
         )
-        # checkpoint every SECOND round (and the last): each eager
-        # checkpoint is an extra materialization job, and two rounds of
-        # lineage is still cheap to recompute — measured 3.0s -> 2.0s
-        # warm at sf0.1 with bit-identical ranks (integer math is
-        # checkpoint-cadence independent).  r13: skipping the LAST
-        # checkpoint (single consumer) was tried and REVERTED — min
-        # wall regressed 1.10-1.15× in two interleaved A/Bs (medians
-        # improved 0.95-1.02, i.e. ambiguous), and the driver grades
-        # min-of-3; the other frontier loops show clear wins from the
-        # same change, this one does not.
-        if (i + 1) % 2 == 0 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = fixed_rounds(ranks, step, iters)
     return ranks.select(
         F.col("v").alias("node"),
         F.col("rank").alias("rank_fp"),
@@ -295,7 +287,8 @@ def personalized_pagerank_fixed(
         "v",
         F.when(F.col("is_seed"), F.lit(init)).otherwise(F.lit(0)).cast("long").alias("rank"),
     )
-    for i in range(iters):
+
+    def step(ranks: DataFrame) -> DataFrame:
         inflow = (
             edges.join(ranks, edges.src == ranks.v)
             .join(outdeg, "src")
@@ -303,15 +296,15 @@ def personalized_pagerank_fixed(
             .groupBy("v")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = nodes.join(inflow, "v", "left").select(
+        return nodes.join(inflow, "v", "left").select(
             "v",
             (
                 F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0)).cast("long")
                 + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")
             ).alias("rank"),
         )
-        if (i + 1) % 2 == 0 or i == iters - 1:  # same cadence as pagerank_fixed
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = fixed_rounds(ranks, step, iters)
     return ranks.select(
         F.col("v").alias("node"),
         F.col("rank").alias("rank_fp"),
@@ -371,7 +364,7 @@ def bellman_ford(edges_w: DataFrame, seeds: DataFrame, *, iters: int = 6) -> Dat
 
     Per round: one shuffle joining current distances to out-edges plus
     one min-aggregate — the same two-shuffle iteration shape as
-    PageRank; ``localCheckpoint`` per round cuts lineage. The round
+    PageRank, on ``plans.lineage.fixed_rounds``. The round
     count bounds path length (round i holds the min over ≤ i-edge
     walks, the standard BF invariant), which both caps work on huge
     graphs and makes the contract recursively-CTE-replayable."""
@@ -381,16 +374,16 @@ def bellman_ford(edges_w: DataFrame, seeds: DataFrame, *, iters: int = 6) -> Dat
     e = edges_w.select(
         F.col("src").cast("long"), F.col("dst").cast("long"), F.col("w").cast("long")
     )
-    for i in range(iters):
+
+    def step(dist: DataFrame) -> DataFrame:
         cand = (
             dist.alias("d")
             .join(e.alias("e"), F.col("d.v") == F.col("e.src"))
             .select(F.col("e.dst").alias("v"), (F.col("d.dist") + F.col("e.w")).alias("dist"))
         )
-        dist = dist.unionByName(cand).groupBy("v").agg(F.min("dist").alias("dist"))
-        if (i + 1) % 2 == 0 or i == iters - 1:  # same cadence as pagerank_fixed
-            dist = dist.localCheckpoint(eager=True)
-    return dist
+        return dist.unionByName(cand).groupBy("v").agg(F.min("dist").alias("dist"))
+
+    return fixed_rounds(dist, step, iters)
 
 
 def kcore_peel(edges: DataFrame, *, k: int = 5, rounds: int = 4) -> DataFrame:
@@ -403,8 +396,8 @@ def kcore_peel(edges: DataFrame, *, k: int = 5, rounds: int = 4) -> DataFrame:
     filtering primitive (dense-substructure extraction).
 
     Scale: each round is one partial-aggregated degree groupBy plus two
-    semi-joins on node id — no windows, no driver state; lineage is cut
-    every second round like the other iterative algorithms. Full
+    semi-joins on node id — no windows, no driver state; the rounds run
+    through ``plans.lineage.fixed_rounds``. Full
     convergence at 100 TB = keep peeling until the survivor count is
     stable (round count is data-bounded by the degeneracy ordering;
     the fixed-round variant is the gate-replayable contract)."""
@@ -419,21 +412,21 @@ def kcore_peel(edges: DataFrame, *, k: int = 5, rounds: int = 4) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    alive = und
-    for i in range(rounds):
+
+    def step(alive: DataFrame) -> DataFrame:
         keep = (
             alive.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
             .select(F.col("src").alias("node"))
         )
-        alive = (
+        return (
             alive.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
             .select("src", "dst")
         )
-        if (i + 1) % 2 == 0 or i == rounds - 1:  # same cadence as pagerank_fixed
-            alive = alive.localCheckpoint(eager=True)
+
+    alive = fixed_rounds(und, step, rounds)
     return (
         alive.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
@@ -488,8 +481,7 @@ def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
     Scale shape: one shuffle pair per round (neighbor-label join on the
     edge list, then the (node, label) count aggregation); the per-node
     argmax is a count-desc/label-asc window — partitioned by node, never
-    global.  ``localCheckpoint`` every second round cuts lineage, same
-    cadence as PageRank.
+    global.  The rounds run through ``plans.lineage.fixed_rounds``.
     """
     from pyspark.sql.window import Window
 
@@ -509,23 +501,20 @@ def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
         "v", F.col("v").alias("lbl")
     )
     win = Window.partitionBy("v").orderBy(F.desc("cnt"), F.asc("lbl"))
-    for i in range(rounds):
+
+    def step(labels: DataFrame) -> DataFrame:
         counts = (
             und.join(labels.select(F.col("v").alias("w"), "lbl"), "w")
             .groupBy(F.col("u").alias("v"), "lbl")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
+        return (
             counts.withColumn("rn", F.row_number().over(win))
             .filter(F.col("rn") == 1)
             .select("v", "lbl")
         )
-        # cadence-2 checkpoint EXCEPT the last round (r13): the final
-        # labels frame has one consumer (the output select) — its eager
-        # checkpoint was an extra materialization pass + job; the final
-        # action computes the ≤2 trailing lazy rounds once.
-        if (i + 1) % 2 == 0 and i != rounds - 1:
-            labels = labels.localCheckpoint(eager=True)
+
+    labels = fixed_rounds(labels, step, rounds)
     return labels.select(F.col("v").alias("node"), F.col("lbl").alias("community"))
 
 
@@ -576,10 +565,7 @@ def community_modularity(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
     rollup.  ``m`` is one scalar ``count()`` (driver-side by design,
     like PageRank's ``n``).
     """
-    # labels is consumed THREE times below (la, lb, per_c) — materialize
-    # it here now that label_propagation leaves its final round lazy
-    # (r13; the checkpoint moved from inside LPA to this multi-consumer
-    # call site, per the consumer-count rule)
+    # three consumers below (la, lb, per_c): materialize the lazy final round once
     labels = label_propagation(edges, rounds=rounds).localCheckpoint(eager=True)
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     und = (
@@ -691,11 +677,14 @@ def hits_fixed(edges: DataFrame, *, iters: int = 3, scale: int = HITS_SCALE) -> 
     Scale: two shuffle pairs per iteration (join on src / agg on dst,
     then join on dst / agg on src); the normalization total is a 1-row
     scalar aggregate broadcast (the plan-audit-bounded cross join);
-    ``localCheckpoint`` every second round cuts lineage.
+    the first ``iters - 1`` rounds run through
+    ``plans.lineage.fixed_rounds``.  ``iters`` must be at least 1.
 
     Simple-graph semantics: duplicate (src, dst) edges collapse, like
     :func:`pagerank_fixed` and the oracle's DISTINCT projection.
     """
+    if iters < 1:
+        raise ValueError(f"hits_fixed needs iters >= 1, got iters={iters}")
     edges = edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long")
     ).distinct().localCheckpoint(eager=True)
@@ -743,17 +732,14 @@ def hits_fixed(edges: DataFrame, *, iters: int = 3, scale: int = HITS_SCALE) -> 
             .select("v", F.expr(f"(s * {scale}) div t").alias(out))
         )
 
-    for i in range(iters):
-        auth = _half(hub, "hub", "src", "dst", "auth")
-        hub = _half(auth, "auth", "dst", "src", "hub")
-        # hub is the only frame carried into the next round — checkpoint
-        # it on the pagerank cadence (every second round + the last);
-        # auth only needs materializing once, at the final iteration,
-        # for the output join (each round recomputes it from hub anyway)
-        if i % 2 == 1 or i == iters - 1:
-            hub = hub.localCheckpoint(eager=True)
-        if i == iters - 1:
-            auth = auth.localCheckpoint(eager=True)
+    def step(hub: DataFrame) -> DataFrame:
+        return _half(_half(hub, "hub", "src", "dst", "auth"), "auth", "dst", "src", "hub")
+
+    hub = fixed_rounds(hub, step, iters - 1)
+    # the final auth has two consumers (the last hub half-step and the
+    # output join), so the last round runs here with auth materialized once
+    auth = _half(hub, "hub", "src", "dst", "auth").localCheckpoint(eager=True)
+    hub = _half(auth, "auth", "dst", "src", "hub")
     return (
         nodes.join(hub, "v", "left")
         .join(auth.withColumnRenamed("auth", "_a"), "v", "left")
@@ -768,6 +754,8 @@ def hits_fixed(edges: DataFrame, *, iters: int = 3, scale: int = HITS_SCALE) -> 
 def sql_hits_fixed(sql_edges: str, *, iters: int = 3, scale: int = HITS_SCALE) -> str:
     """DuckDB twin of :func:`hits_fixed`: the K iterations unrolled as
     chained CTEs, bit-identical by integer arithmetic."""
+    if iters < 1:
+        raise ValueError(f"sql_hits_fixed needs iters >= 1, got iters={iters}")
     ctes = [
         f"edges AS (SELECT DISTINCT src, dst FROM ({sql_edges}))",
         "nodes AS (SELECT src AS v FROM edges UNION SELECT dst FROM edges)",

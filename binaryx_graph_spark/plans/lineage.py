@@ -67,6 +67,32 @@ def frontier_levels(
         yield depth, level
 
 
+def fixed_rounds(
+    state: DataFrame, step: Callable[[DataFrame], DataFrame], rounds: int
+) -> DataFrame:
+    """The driver-side loop of every fixed-round operator: apply
+    ``step`` exactly ``rounds`` times and return the final state
+    (``state`` itself when ``rounds`` is 0).
+
+    A non-final round's state has one consumer, the next round.  Every
+    second one is eagerly ``localCheckpoint``-ed to cut lineage, at half
+    the job cost of a checkpoint per round: PageRank measured 3.0 →
+    2.0 s warm at sf0.1 against checkpointing every round, with
+    bit-identical ranks (integer math does not depend on the cadence).
+
+    The final round's state has one consumer, the caller's output, so it
+    is returned lazily.  Skipping label_propagation's final checkpoint
+    measured 0.933×.  The same skip on PageRank was once reverted on
+    min-of-3 wall time (1.10–1.15×), while the medians of those A/Bs
+    moved 0.95–1.02×: ambiguous.  A caller that reads the final state
+    more than once checkpoints it itself."""
+    for r in range(1, rounds + 1):
+        state = step(state)
+        if r % 2 == 0 and r < rounds:
+            state = state.localCheckpoint(eager=True)
+    return state
+
+
 def checkpoint_cut(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint + statistics reset (see module docstring).
 

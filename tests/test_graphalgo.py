@@ -8,6 +8,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest
 from pyspark.sql import functions as F
 
 from binaryx_graph_spark.operators.graphalgo import (
@@ -150,25 +151,60 @@ def test_hits_star_graph(spark):
     assert sum(a for _h, a in got.values()) >= HITS_SCALE - 10  # floor loss
 
 
-def test_hits_matches_unrolled_oracle(spark):
-    """Bit-exact parity with the DuckDB unrolled-CTE twin on an
-    asymmetric graph (the same contract the registered gate pins)."""
+# cycles 1→2→3→1 and 3→4→5→3, a chord, a self-loop and two pendants:
+# the k=3 peel removes a different node set in each of rounds 1-3, the
+# last round leaving nothing
+_TWIN_PAIRS = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 3), (2, 5), (6, 6), (6, 1), (7, 4)]
+_TWIN_SEEDS = (1, 4, 7)
+
+
+def _twins(edges, sql_edges, op, n):
+    from binaryx_graph_spark.operators import graphalgo as G
+
+    if op == "pagerank_fixed":
+        return G.pagerank_fixed(edges, iters=n), G.sql_pagerank_fixed(sql_edges, iters=n)
+    if op == "personalized_pagerank_fixed":
+        return (
+            G.personalized_pagerank_fixed(edges, F.col("v").isin(*_TWIN_SEEDS), iters=n),
+            G.sql_personalized_pagerank_fixed(sql_edges, f"v IN {_TWIN_SEEDS}", iters=n),
+        )
+    if op == "kcore_peel":
+        return G.kcore_peel(edges, k=3, rounds=n), G.sql_kcore_peel(sql_edges, k=3, rounds=n)
+    if op == "label_propagation":
+        return G.label_propagation(edges, rounds=n), G.sql_label_propagation(sql_edges, rounds=n)
+    return G.hits_fixed(edges, iters=n), G.sql_hits_fixed(sql_edges, iters=n)
+
+
+@pytest.mark.parametrize(
+    "op, rounds",
+    [
+        (op, n)
+        for op in ("pagerank_fixed", "personalized_pagerank_fixed", "kcore_peel", "label_propagation")
+        for n in (0, 1, 2, 3)
+    ]
+    + [("hits_fixed", n) for n in (1, 2, 3)],
+)
+def test_fixed_point_matches_duckdb_twin(spark, op, rounds):
+    """Bit-exact parity with the DuckDB unrolled-CTE twin (the contract
+    the registered gate pins) at every checkpoint boundary of
+    ``fixed_rounds``: no round, one lazy round, a checkpointed round
+    and a lazy round past it."""
     import duckdb
 
+    vals = ", ".join(f"({s}, {d})" for s, d in _TWIN_PAIRS)
+    sql_edges = f"SELECT * FROM (VALUES {vals}) AS t(src, dst)"
+    df, sql = _twins(_edges(spark, _TWIN_PAIRS), sql_edges, op, rounds)
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == sorted(duckdb.sql(sql).fetchall())
+
+
+def test_hits_rejects_zero_iters(spark):
     from binaryx_graph_spark.operators.graphalgo import hits_fixed, sql_hits_fixed
 
-    pairs = [(1, 2), (1, 3), (2, 3), (4, 3), (3, 5), (5, 1), (2, 5)]
-    got = {
-        r.node: (r.hub_fp, r.auth_fp)
-        for r in hits_fixed(_edges(spark, pairs), iters=3).collect()
-    }
-    vals = ", ".join(f"({s}, {d})" for s, d in pairs)
-    sql = sql_hits_fixed(f"SELECT * FROM (VALUES {vals}) AS t(src, dst)")
-    want = {
-        int(n): (int(h), int(a))
-        for n, h, a in duckdb.sql(sql).fetchall()
-    }
-    assert got == want
+    with pytest.raises(ValueError, match="iters"):
+        hits_fixed(_edges(spark, [(1, 2)]), iters=0)
+    with pytest.raises(ValueError, match="iters"):
+        sql_hits_fixed("SELECT 1 AS src, 2 AS dst", iters=0)
 
 
 def test_bigram_lm_backoff_and_exact_sum(spark):

@@ -7,15 +7,19 @@ dominates planning (SCALE.md addendum 32).  These tests pin (a) the
 helper actually resets stats, (b) values survive the rebuild untouched,
 (c) the distributed CC loop — the worst measured offender (stats bits
 DOUBLED per round) — now converges on a long-diameter graph that
-previously planning-stalled.  The last test pins the frontier-loop
-rule of ``frontier_levels``.
+previously planning-stalled.  The last two tests pin the checkpoint
+rules of the loop helpers ``frontier_levels`` and ``fixed_rounds``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from binaryx_graph_spark.plans.lineage import checkpoint_cut, frontier_levels
+from binaryx_graph_spark.plans.lineage import (
+    checkpoint_cut,
+    fixed_rounds,
+    frontier_levels,
+)
 
 
 def _bits(df) -> int:
@@ -112,3 +116,27 @@ def test_frontier_levels_checkpoint_rule(spark):
     assert not _is_checkpoint_scan(got[-1][1])
     assert got[-1][1].collect() == []
     assert calls == [1, 2, 3, 4]
+
+
+def test_fixed_rounds_checkpoint_rule(spark):
+    first = spark.range(3).select(F.col("id").alias("v"))
+    for rounds in range(6):
+        received = []
+
+        def step(state):
+            received.append(state)
+            return state.select((F.col("v") + 1).alias("v"))
+
+        out = fixed_rounds(first, step, rounds)
+        assert len(received) == rounds
+        # received[r] is the state after round r (r = 0: the input); a
+        # state that reaches a step is non-final, and after every
+        # second round it is a checkpoint scan
+        assert rounds == 0 or received[0] is first
+        for r, state in enumerate(received[1:], start=1):
+            assert _is_checkpoint_scan(state) == (r % 2 == 0), (rounds, r)
+        if rounds == 0:
+            assert out is first
+        else:  # the final state is returned lazily
+            assert not _is_checkpoint_scan(out)
+        assert sorted(r.v for r in out.collect()) == [rounds, rounds + 1, rounds + 2]

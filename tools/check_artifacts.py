@@ -4,10 +4,9 @@ Asserts, without running Spark:
   (a) registry names == latest LOCALGATE_r*.json query names (the local
       gate artifact must cover exactly the registered catalog — the r5
       verdict caught a 231≠232 drift this check would have flagged);
-  (b) ``_WITNESS_PRIORITY`` ⊆ registry (no stale priority entries);
-  (c) PLANS.md ``## <name>`` section count == registry count;
-  (d) QUERIES.md row count == registry count;
-  (e) every witness_fps.json / witness_tombstones.json key ∈ registry.
+  (b) PLANS.md ``## <name>`` section count == registry count;
+  (c) QUERIES.md row count == registry count;
+  (d) every witness_fps.json / witness_tombstones.json key ∈ registry.
 
 Run in the end-of-round snapshot (and any time after registering or
 removing a query).  Exit code 1 on any drift.
@@ -25,7 +24,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from binaryx_graph_spark.registry import _WITNESS_PRIORITY, load_all  # noqa: E402
+from binaryx_graph_spark.registry import load_all  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -51,38 +50,33 @@ def main() -> int:
     else:
         problems.append("(a) no LOCALGATE_r*.json artifact found")
 
-    # (b) priority list has no stale entries
-    stale = [n for n in _WITNESS_PRIORITY if n not in names]
-    if stale:
-        problems.append(f"(b) _WITNESS_PRIORITY entries not in registry: {stale}")
-
-    # (c) PLANS.md section count
+    # (b) PLANS.md section count
     plans_path = os.path.join(REPO, "PLANS.md")
     if os.path.exists(plans_path):
         with open(plans_path) as f:
             plan_names = set(re.findall(r"^## (\S+)$", f.read(), re.M))
         if plan_names != names:
             problems.append(
-                f"(c) PLANS.md has {len(plan_names)} sections vs {len(names)} registered"
+                f"(b) PLANS.md has {len(plan_names)} sections vs {len(names)} registered"
                 f" (missing: {sorted(names - plan_names)[:10]}, extra: {sorted(plan_names - names)[:10]})"
             )
     else:
-        problems.append("(c) PLANS.md not found")
+        problems.append("(b) PLANS.md not found")
 
-    # (d) QUERIES.md row count
+    # (c) QUERIES.md row count
     queries_path = os.path.join(REPO, "QUERIES.md")
     if os.path.exists(queries_path):
         with open(queries_path) as f:
             q_names = set(re.findall(r"^\| `([^`]+)` \|", f.read(), re.M))
         if q_names != names:
             problems.append(
-                f"(d) QUERIES.md has {len(q_names)} rows vs {len(names)} registered"
+                f"(c) QUERIES.md has {len(q_names)} rows vs {len(names)} registered"
                 f" (missing: {sorted(names - q_names)[:10]}, extra: {sorted(q_names - names)[:10]})"
             )
     else:
-        problems.append("(d) QUERIES.md not found")
+        problems.append("(c) QUERIES.md not found")
 
-    # (e) ledger keys all registered
+    # (d) ledger keys all registered
     for fname in ("witness_fps.json", "witness_tombstones.json"):
         path = os.path.join(REPO, "tools", fname)
         if not os.path.exists(path):
@@ -91,7 +85,7 @@ def main() -> int:
             keys = set(json.load(f))
         bad = sorted(keys - names)
         if bad:
-            problems.append(f"(e) {fname} keys not in registry: {bad[:10]}")
+            problems.append(f"(d) {fname} keys not in registry: {bad[:10]}")
 
     if problems:
         print(f"ARTIFACT DRIFT ({len(problems)}):")
