@@ -314,7 +314,6 @@ def main(argv: list[str] | None = None) -> int:
 
             files = sorted(_glob.glob(f"{args.path}/{args.pattern}"))
             groups = [files[i:i + batch_size] for i in range(0, len(files), batch_size)]
-            last_stats = None
             for seq, group in enumerate(groups, start=1):
                 docs = read_analysis_json(spark, group)  # list of files
                 if args.validate:
@@ -324,12 +323,13 @@ def main(argv: list[str] | None = None) -> int:
                         return 2
                 t = build_graph_tables(docs)
                 wh.initialize()
-                wh.merge_batch(
-                    {k: v for k, v in t.items() if k != "import_stats"}, batch_seq=seq
-                )
-                last_stats = t["import_stats"]
-            if last_stats is not None:
-                emit(last_stats, fmt)
+                with t:
+                    wh.merge_batch(
+                        {k: v for k, v in t.items() if k != "import_stats"},
+                        batch_seq=seq,
+                    )
+                    if seq == len(groups):
+                        emit(t["import_stats"], fmt)
             return 0
         path = args.path if args.what == "json" else f"{args.path}/{args.pattern}"
         docs = read_analysis_json(spark, path)
@@ -340,8 +340,9 @@ def main(argv: list[str] | None = None) -> int:
                 return 2
         t = build_graph_tables(docs)
         wh.initialize()
-        wh.merge_batch({k: v for k, v in t.items() if k != "import_stats"})
-        emit(t["import_stats"], fmt)
+        with t:
+            wh.merge_batch({k: v for k, v in t.items() if k != "import_stats"})
+            emit(t["import_stats"], fmt)
         return 0
 
     if args.cmd == "db":

@@ -82,7 +82,8 @@ class Engine:
         """Reference ingest (S1-S2, E1-E11): read analysis JSON, project
         node/edge tables, MERGE-upsert into the warehouse."""
         docs = read_analysis_json(self.spark, json_path)
-        self.warehouse.merge_batch(build_graph_tables(docs), batch_seq=batch_seq)
+        with build_graph_tables(docs) as tables:
+            self.warehouse.merge_batch(tables, batch_seq=batch_seq)
 
     def ingest_atomic(
         self, json_path: str | list[str], *, txn: tuple[str, int], batch_seq: int = 1
@@ -96,9 +97,10 @@ class Engine:
         docs = read_analysis_json(self.spark, json_path)
         tables = build_graph_tables(docs)
         tables.pop("import_stats", None)  # derived stats, not a graph table
-        return self.warehouse.import_atomic(
-            tables, txn=txn, batch_seq=batch_seq, incremental=False
-        )
+        with tables:
+            return self.warehouse.import_atomic(
+                tables, txn=txn, batch_seq=batch_seq, incremental=False
+            )
 
     def cypher_replay_import(self, json_path: str | list[str]) -> dict[str, int]:
         """Import via the reference's VERBATIM Cypher templates

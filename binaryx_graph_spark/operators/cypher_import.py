@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..cypher import cypher_write_batch
 from ..functions.addr import normalize_address
+from ..plans.lineage import release
 from .ingest import item_streams, project_documents
 
 # -- importer.rs:87-94
@@ -110,96 +111,101 @@ def replay_reference_import(wh, docs_raw: DataFrame) -> dict[str, int]:
     cross-stage uid collisions resolve identically to one-at-a-time
     replay.  Returns {table: merged-row-count}.
     """
-    docs = project_documents(docs_raw)
-    docs.cache()
+    docs = project_documents(docs_raw).cache()
     s = item_streams(docs)
-    order = ["ingest_seq", "pos"]
-    out: dict[str, int] = {}
+    try:
+        order = ["ingest_seq", "pos"]
+        out: dict[str, int] = {}
 
-    def run(tpl: str, params: DataFrame, order_cols) -> None:
-        r = cypher_write_batch(wh, tpl, params, order_cols=order_cols)
-        out[r["table"]] = r["rows"]
+        def run(tpl: str, params: DataFrame, order_cols) -> None:
+            r = cypher_write_batch(wh, tpl, params, order_cols=order_cols)
+            out[r["table"]] = r["rows"]
 
-    run(
-        TPL_BINARY,
-        docs.select(
-            F.col("binary_hash").alias("hash"),
-            "filename", "file_path", "file_size", "format", "arch",
-            "ingest_seq",
-        ),
-        ["ingest_seq"],
-    )
-    run(
-        TPL_FUNCTION,
-        s["fn_nodes_internal"]
-        .unionByName(s["fn_nodes_import"])
-        .unionByName(s["fn_nodes_export"]),
-        ["ingest_seq", "stage", "pos"],
-    )
-    run(TPL_STRING, s["str_items"].select("uid", "value", *order), order)
-    run(
-        TPL_LIBRARY,
-        s["imp_items"].select(F.col("library").alias("name"), *order),
-        order,
-    )
-    run(
-        TPL_CONTAINS,
-        s["fn_items"].select(
-            "binary_hash", F.col("uid").alias("function_uid"), *order
-        ),
-        order,
-    )
-    run(
-        TPL_CONTAINS_STRING,
-        s["str_items"].select(
-            "binary_hash",
-            F.col("uid").alias("string_uid"),
-            # normalized-or-RAW (session.rs:368-371); missing → '' at
-            # the importer call (importer.rs:227 unwrap_or(""))
-            F.coalesce(
-                normalize_address("address"), F.col("address"), F.lit("")
-            ).alias("address"),
-            *order,
-        ),
-        order,
-    )
-    run(
-        TPL_BELONGS_TO,
-        s["imp_items"].select(
-            F.col("uid").alias("function_uid"),
-            F.col("library").alias("library_name"),
-            *order,
-        ),
-        order,
-    )
-    run(
-        TPL_IMPORTS_LIBRARY,
-        s["imp_items"].select(
-            "binary_hash", F.col("library").alias("library_name"), *order
-        ),
-        order,
-    )
-    run(
-        TPL_IMPORTS,
-        s["imp_items"].select(
-            "binary_hash",
-            F.col("uid").alias("function_uid"),
-            F.col("iat_address").alias("address"),
-            *order,
-        ),
-        order,
-    )
-    run(
-        TPL_CALLS,
-        s["calls_resolved"]
-        .filter(F.col("src_uid").isNotNull() & F.col("dst_uid").isNotNull())
-        .select(
-            F.col("src_uid").alias("from_uid"),
-            F.col("dst_uid").alias("to_uid"),
-            "offset",
-            "call_type",
-            *order,
-        ),
-        order,
-    )
-    return out
+        run(
+            TPL_BINARY,
+            docs.select(
+                F.col("binary_hash").alias("hash"),
+                "filename", "file_path", "file_size", "format", "arch",
+                "ingest_seq",
+            ),
+            ["ingest_seq"],
+        )
+        run(
+            TPL_FUNCTION,
+            s["fn_nodes_internal"]
+            .unionByName(s["fn_nodes_import"])
+            .unionByName(s["fn_nodes_export"]),
+            ["ingest_seq", "stage", "pos"],
+        )
+        run(TPL_STRING, s["str_items"].select("uid", "value", *order), order)
+        run(
+            TPL_LIBRARY,
+            s["imp_items"].select(F.col("library").alias("name"), *order),
+            order,
+        )
+        run(
+            TPL_CONTAINS,
+            s["fn_items"].select(
+                "binary_hash", F.col("uid").alias("function_uid"), *order
+            ),
+            order,
+        )
+        run(
+            TPL_CONTAINS_STRING,
+            s["str_items"].select(
+                "binary_hash",
+                F.col("uid").alias("string_uid"),
+                # normalized-or-RAW (session.rs:368-371); missing → '' at
+                # the importer call (importer.rs:227 unwrap_or(""))
+                F.coalesce(
+                    normalize_address("address"), F.col("address"), F.lit("")
+                ).alias("address"),
+                *order,
+            ),
+            order,
+        )
+        run(
+            TPL_BELONGS_TO,
+            s["imp_items"].select(
+                F.col("uid").alias("function_uid"),
+                F.col("library").alias("library_name"),
+                *order,
+            ),
+            order,
+        )
+        run(
+            TPL_IMPORTS_LIBRARY,
+            s["imp_items"].select(
+                "binary_hash", F.col("library").alias("library_name"), *order
+            ),
+            order,
+        )
+        run(
+            TPL_IMPORTS,
+            s["imp_items"].select(
+                "binary_hash",
+                F.col("uid").alias("function_uid"),
+                F.col("iat_address").alias("address"),
+                *order,
+            ),
+            order,
+        )
+        run(
+            TPL_CALLS,
+            s["calls_resolved"]
+            .filter(F.col("src_uid").isNotNull() & F.col("dst_uid").isNotNull())
+            .select(
+                F.col("src_uid").alias("from_uid"),
+                F.col("dst_uid").alias("to_uid"),
+                "offset",
+                "call_type",
+                *order,
+            ),
+            order,
+        )
+        return out
+    finally:
+        # release the cached documents and the checkpointed address map,
+        # so no cached plan outlives the import
+        release(docs)
+        release(s["addr_map"])

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 from ..functions.addr import normalize_address
 from ..functions.uid import function_uid, import_uid, library_uid, string_uid
+from ..plans.lineage import release
 from ..sources.json_source import (
     CALL_ITEM,
     EXPORT_ITEM,
@@ -131,7 +132,9 @@ def item_streams(docs: DataFrame) -> dict[str, DataFrame]:
     calls_resolved`` — each carries its (ingest_seq, pos) statement
     order; the fn_nodes_* streams carry the session's ``stage`` rank
     (functions=0, imports=1, exports=2) so unioning them reproduces the
-    reference's within-file statement order exactly.
+    reference's within-file statement order exactly.  ``addr_map``
+    comes back as an eager local checkpoint: the caller frees it with
+    ``plans.lineage.release`` once the streams are consumed.
     """
     # ---------------------------------------------------------------- E2
     fn_items = _explode_items(docs, "functions", FUNCTION_ITEM).select(
@@ -278,8 +281,14 @@ def item_streams(docs: DataFrame) -> dict[str, DataFrame]:
         .unionByName(_arm(imp_items, "iat_address", 3))
         .unionByName(_arm(exp_new, "norm_address", 1))
     )
-    addr_map = _last_wins(addr_map, ["binary_hash", "ingest_seq", "addr"], ["prio", "pos"]).select(
-        "binary_hash", "ingest_seq", "addr", "uid"
+    # materialized once: call resolution probes the map four times (norm
+    # and raw key forms, for src and dst), and each lazy probe recomputed
+    # the 5-way union, the prior_keys anti-join and the window (staging
+    # calls took 18 jobs; over the checkpoint it takes 3)
+    addr_map = (
+        _last_wins(addr_map, ["binary_hash", "ingest_seq", "addr"], ["prio", "pos"])
+        .select("binary_hash", "ingest_seq", "addr", "uid")
+        .localCheckpoint(eager=True)
     )
 
     # ---------------------------------------------------------------- E8
@@ -315,7 +324,8 @@ def item_streams(docs: DataFrame) -> dict[str, DataFrame]:
         )
         # normalized form first, raw fallback (session.rs:487-492); each
         # call resolves against its OWN file's map (ingest_seq equality);
-        # the map is dimension-sized per batch → broadcast both probes
+        # the map is dimension-sized per batch and materialized once
+        # (checkpointed above) → all four probes broadcast its rows
         df = df.join(
             F.broadcast(m_norm),
             (F.col("binary_hash") == F.col("_mb"))
@@ -349,11 +359,31 @@ def item_streams(docs: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def build_graph_tables(docs_raw: DataFrame, *, parallel_calls: bool = False) -> dict[str, DataFrame]:
+class GraphTables(dict):
+    """The tables :func:`build_graph_tables` returns, keyed by name, plus
+    the ``held`` frames several of them read (the cached documents and
+    the checkpointed address map).  Consume the tables in a ``with``
+    block: leaving it releases those frames, so no cached plan outlives
+    the ingest, and the lazy tables cannot be read after it."""
+
+    def __init__(self, tables: dict[str, DataFrame], held: list[DataFrame]):
+        super().__init__(tables)
+        self.held = held
+
+    def __enter__(self) -> GraphTables:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self.held:
+            release(df)
+
+
+def build_graph_tables(docs_raw: DataFrame, *, parallel_calls: bool = False) -> GraphTables:
     """Full batch ETL: documents → the 4 node + 6 edge tables + stats.
 
-    Returns dict with keys: binaries functions strings libraries contains
-    imports imports_library belongs_to calls contains_string import_stats.
+    Returns a :class:`GraphTables` with keys: binaries functions strings
+    libraries contains imports imports_library belongs_to calls
+    contains_string import_stats.
 
     ``parallel_calls=True`` keys CALLS by (src, dst, offset) instead of
     the reference's pair-collapse — preserving one edge per call SITE so
@@ -434,16 +464,19 @@ def build_graph_tables(docs_raw: DataFrame, *, parallel_calls: bool = False) -> 
         )
     )
 
-    return {
-        "binaries": binaries,
-        "functions": functions,
-        "strings": strings,
-        "libraries": libraries,
-        "contains": contains,
-        "imports": imports_edges,
-        "imports_library": imports_library,
-        "belongs_to": belongs_to,
-        "calls": calls,
-        "contains_string": contains_string,
-        "import_stats": import_stats,
-    }
+    return GraphTables(
+        {
+            "binaries": binaries,
+            "functions": functions,
+            "strings": strings,
+            "libraries": libraries,
+            "contains": contains,
+            "imports": imports_edges,
+            "imports_library": imports_library,
+            "belongs_to": belongs_to,
+            "calls": calls,
+            "contains_string": contains_string,
+            "import_stats": import_stats,
+        },
+        [docs, s["addr_map"]],
+    )

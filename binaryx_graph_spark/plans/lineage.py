@@ -108,3 +108,15 @@ def checkpoint_cut(df: DataFrame) -> DataFrame:
         return DataFrame(njdf, spark)
     except Exception:
         return cp
+
+
+def release(df: DataFrame) -> None:
+    """Free what ``df`` holds: its cache entry and, for an eager
+    ``localCheckpoint``, the checkpoint's blocks, which
+    ``DataFrame.unpersist`` does not reach (they belong to the RDD under
+    the frame's ``LogicalRDD`` plan).  Reading a released checkpoint
+    fails: release a frame only once nothing reads it again."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

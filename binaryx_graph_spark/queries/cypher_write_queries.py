@@ -86,18 +86,18 @@ def _replayed_warehouse(spark: SparkSession):
         wh.initialize()
         replay_reference_import(wh, docs)
 
-        expected = build_graph_tables(docs)
-        for table in _GRAPH_TABLES:
-            exp = sorted(tuple(r) for r in expected[table].collect())
-            got = sorted(
-                tuple(r)
-                for r in wh.read(table).select(*expected[table].columns).collect()
-            )
-            if got != exp:
-                raise AssertionError(
-                    f"cypher replay diverged from build_graph_tables on "
-                    f"'{table}': {got} != {exp}"
+        with build_graph_tables(docs) as expected:
+            for table in _GRAPH_TABLES:
+                exp = sorted(tuple(r) for r in expected[table].collect())
+                got = sorted(
+                    tuple(r)
+                    for r in wh.read(table).select(*expected[table].columns).collect()
                 )
+                if got != exp:
+                    raise AssertionError(
+                        f"cypher replay diverged from build_graph_tables on "
+                        f"'{table}': {got} != {exp}"
+                    )
         try:
             os.rename(stage, root)  # atomic publish; race loser keeps stage
         except OSError:

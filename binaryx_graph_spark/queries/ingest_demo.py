@@ -71,10 +71,10 @@ def graph_tables(spark: SparkSession) -> dict[str, DataFrame]:
     if not root.exists():
         d = write_fixture(Path(tempfile.mkdtemp(prefix="bxg_fixture_")))
         docs = read_analysis_json(spark, d)
-        tables = build_graph_tables(docs)
         stage = Path(tempfile.mkdtemp(prefix="bxg_fixture_stage_"))
-        for name in _FIXTURE_TABLES:
-            tables[name].coalesce(1).write.mode("overwrite").parquet(str(stage / name))
+        with build_graph_tables(docs) as tables:
+            for name in _FIXTURE_TABLES:
+                tables[name].coalesce(1).write.mode("overwrite").parquet(str(stage / name))
         try:
             os.rename(stage, root)  # atomic publish; loser of a race keeps its stage
         except OSError:
@@ -182,8 +182,8 @@ def ingest_merge_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         d2 = Path(tempfile.mkdtemp(prefix="bxg_merge_in2_"))
         (d2 / "a2.json").write_text(json.dumps(doc_a2))
         docs2 = read_analysis_json(spark, str(d2))
-        batch2 = build_graph_tables(docs2)
-        wh.merge_batch({k: batch2[k] for k in _NODE_TABLES}, batch_seq=2)
+        with build_graph_tables(docs2) as batch2:
+            wh.merge_batch({k: batch2[k] for k in _NODE_TABLES}, batch_seq=2)
         _CACHE[key] = {"binaries": wh.read("binaries").cache()}
     return (
         _CACHE[key]["binaries"]
@@ -348,12 +348,12 @@ def warehouse_lifecycle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --chunk-size=1 execution shape
     for seq, f in enumerate(sorted(fixture_dir.glob("*.json")), start=1):
         docs = read_analysis_json(spark, str(f))
-        tables = build_graph_tables(docs)
         # merge only the watched tables: same chunked-MERGE semantics,
         # 60% fewer parquet write jobs in the gate
-        wh.merge_batch(
-            {k: v for k, v in tables.items() if k in watched}, batch_seq=seq
-        )
+        with build_graph_tables(docs) as tables:
+            wh.merge_batch(
+                {k: v for k, v in tables.items() if k in watched}, batch_seq=seq
+            )
     rows += phase("2_chunked_merge")
     wh.clear()
     rows += phase("3_clear")
@@ -675,8 +675,8 @@ def warehouse_time_travel_certified(spark: SparkSession, sf_dir: str) -> DataFra
     tables / TIME TRAVEL / ROLLBACK / VACUUM, certified INSIDE the gate
     (the compaction-row pattern).  Flat tables commit through the SAME
     manifest protocol as bucketed ones (r9 unification — one
-    object-store-safe protocol, no POSIX directory renames): the
-    freshly initialized empty state is adopted as v0, each MERGE
+    object-store-safe protocol, no POSIX directory renames): a freshly
+    initialized table is v0, a manifest listing no files, and each MERGE
     publishes a manifest over new immutable root files.  Two MERGE
     commits at data scale (batch 2 last-write-wins over the overlap
     keys), then the query pins, via counts + exact integer checksums

@@ -23,7 +23,8 @@ def _tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     key = f"{id(spark)}:{sf_dir}"
     if key not in _CACHE:
         docs = scaled_analysis_docs(spark, sf_dir)
-        _CACHE[key] = {k: v.localCheckpoint(eager=True) for k, v in build_graph_tables(docs).items()}
+        with build_graph_tables(docs) as tables:
+            _CACHE[key] = {k: v.localCheckpoint(eager=True) for k, v in tables.items()}
     return _CACHE[key]
 
 

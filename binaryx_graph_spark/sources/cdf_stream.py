@@ -396,5 +396,9 @@ class WarehouseCdfDataSource(DataSource):
 
 
 def register_warehouse_cdf_datasource(spark) -> None:
-    """Idempotent registration."""
-    spark.dataSource.register(WarehouseCdfDataSource)
+    """Register ``warehouse_cdf`` in ``spark``'s session unless it already
+    is: registering it again would replace the registration, with a
+    warning in the log each time."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(WarehouseCdfDataSource.name()):
+        spark.dataSource.register(WarehouseCdfDataSource)

@@ -52,8 +52,10 @@ head's map) or raises :class:`ConcurrentCommitError` (overlapping
 buckets, or a whole-table commit — conversion, rollback, rebucket,
 compaction, flat merge — racing anything).
 
-Version numbers are one monotone sequence per table: pre-manifest
-directory states are adopted as version 0 on first commit, a flat→
+Version numbers are one monotone sequence per table: :meth:`initialize`
+creates a table as a version-0 manifest listing no files (no Spark
+job), a pre-manifest directory state is adopted as version 0 on its
+first commit, a flat→
 bucketed conversion is just the next commit (the flat state stays
 readable through its own manifest), and :meth:`rebucket` re-layouts to
 a new bucket modulus as a commit old versions time-travel across.
@@ -78,6 +80,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 from pathlib import Path
 
@@ -156,12 +159,29 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
 
     # ------------------------------------------------------------- S6 init
     def initialize(self) -> None:
-        """Create empty typed tables (the reference's schema init)."""
+        """Create the empty typed tables (the reference's schema init)
+        as metadata alone: a table with neither a directory nor a
+        manifest is born as a version-0 manifest that lists no files,
+        which reads as an empty frame of its registered schema.  No
+        Spark job runs.  A pre-manifest directory is left for its first
+        commit to adopt.  Initializing twice, or racing another
+        initializer, leaves one v0 per table: the loser of the
+        create-if-absent has nothing left to do."""
         self.root.mkdir(parents=True, exist_ok=True)
-        for name, (schema, _key) in ALL_TABLES.items():
-            if not (self.root / name).exists():
-                empty = self.spark.createDataFrame([], schema)
-                empty.write.mode("overwrite").parquet(self._path(name))
+        for name in ALL_TABLES:
+            if (self.root / name).exists() or self._manifest_versions(name):
+                continue
+            self._publish(
+                self._manifest_dir(name),
+                {
+                    "version": 0,
+                    "n_buckets": None,
+                    "files": [],
+                    "bytes": {},
+                    "stats": {},
+                    "committed_at": round(time.time(), 3),
+                },
+            )
 
     # ------------------------------------------------------------- S5 clear
     def clear(self) -> None:

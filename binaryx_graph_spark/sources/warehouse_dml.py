@@ -919,7 +919,7 @@ class _DmlMixin:
             )
             if evolved is not None:
                 df = self._align_columns(df, evolved.fields)
-            if newest is not None:
+            if newest is not None and (newest["files"] or newest.get("dvs")):
                 stored = self._read_manifest(name, newest)
                 if evolved is not None:
                     stored = self._align_columns(stored, evolved.fields)
@@ -931,10 +931,12 @@ class _DmlMixin:
                     .filter(F.col("_rn") == 1)
                     .drop("_rn", "_seq")
                 )
-                base = newest["version"]
             else:
+                # nothing stored to merge against: a brand-new table, or
+                # one whose newest version lists no files (initialize's v0)
                 merged = df.dropDuplicates(keys)
-                base = -1  # brand-new table: any concurrent creator conflicts
+            # a brand-new table has base -1: any concurrent creator conflicts
+            base = newest["version"] if newest is not None else -1
             names, fb = self._stage_flat(name, merged)
             try:
                 self._commit_manifest(
@@ -1065,7 +1067,7 @@ class _DmlMixin:
                 # O(table) pass. The flat state's files stay in place,
                 # readable through their own manifests until vacuumed.
                 base_df = batch
-                if newest is not None:
+                if newest is not None and (newest["files"] or newest.get("dvs")):
                     stored = self._read_manifest(name, newest)
                     if evolved is not None:
                         stored = self._align_columns(stored, evolved.fields)

@@ -336,7 +336,6 @@ class _ProtocolMixin:
         stale snapshot (the same disjoint-rebase rule the manifest
         commit applies to buckets)."""
         cd = self._catalog_dir()
-        cd.mkdir(parents=True, exist_ok=True)
         for _ in range(50):
             cvs = self.catalog_versions()
             head = cvs[-1] if cvs else -1
@@ -356,15 +355,8 @@ class _ProtocolMixin:
             doc = {"version": nxt, "pins": dict(sorted(merged.items()))}
             if prev_txn:
                 doc["txn"] = prev_txn
-            tmp = cd / f".v{nxt:05d}.{uuid.uuid4().hex[:12]}.tmp"
-            tmp.write_text(json.dumps(doc, sort_keys=True))
-            try:
-                os.link(tmp, cd / f"v{nxt:05d}.json")
+            if self._publish(cd, doc):
                 return nxt
-            except FileExistsError:
-                continue
-            finally:
-                tmp.unlink(missing_ok=True)
         raise ConcurrentCommitError("catalog: gave up after 50 commit conflicts")
 
     def import_atomic(
@@ -515,8 +507,6 @@ class _ProtocolMixin:
         evolution commit passes the evolved ``StructType.json()``;
         rollback passes the TARGET's (None clears, restoring the
         pre-evolution schema)."""
-        md = self._manifest_dir(table)
-        md.mkdir(parents=True, exist_ok=True)
         base = (
             base_version
             if base_version is not None
@@ -680,21 +670,33 @@ class _ProtocolMixin:
             doc["committed_at"] = round(_time.time(), 3)
             if prev_ts is not None and doc["committed_at"] <= prev_ts:
                 doc["committed_at"] = round(prev_ts + 0.001, 3)
-            # tmp name unique per WRITER, not just per process: two
-            # threads racing on one version with a shared tmp would
-            # link each other's content or unlink a live tmp
-            tmp = md / f".v{nxt:05d}.{uuid.uuid4().hex[:12]}.tmp"
-            tmp.write_text(json.dumps(doc, sort_keys=True))
-            try:
-                os.link(tmp, md / f"v{nxt:05d}.json")  # atomic create-if-absent
+            if self._publish(self._manifest_dir(table), doc):
                 return nxt
-            except FileExistsError:
-                continue  # lost the race on this version: re-read the head
-            finally:
-                tmp.unlink(missing_ok=True)
+            # lost the race on this version: re-read the head
         raise ConcurrentCommitError(
             f"table '{table}': gave up after {max_retries} commit conflicts"
         )
+
+    @staticmethod
+    def _publish(directory: Path, doc: dict) -> bool:
+        """Create ``<directory>/vNNNNN.json`` for ``doc["version"]``
+        unless another writer already has: the atomic create-if-absent
+        every manifest and catalog commit hinges on (``os.link`` of a
+        staged temp file).  False when the version was taken."""
+        directory.mkdir(parents=True, exist_ok=True)
+        v = doc["version"]
+        # tmp name unique per WRITER, not just per process: two threads
+        # racing on one version with a shared tmp would link each
+        # other's content or unlink a live tmp
+        tmp = directory / f".v{v:05d}.{uuid.uuid4().hex[:12]}.tmp"
+        tmp.write_text(json.dumps(doc, sort_keys=True))
+        try:
+            os.link(tmp, directory / f"v{v:05d}.json")
+            return True
+        except FileExistsError:
+            return False
+        finally:
+            tmp.unlink(missing_ok=True)
 
     def _rebase_buckets(
         self,
@@ -771,9 +773,9 @@ class _ProtocolMixin:
         }
 
     def _adopt_flat(self, table: str) -> int:
-        """Adopt a pre-manifest flat directory (or a freshly initialized
-        empty table) as its first manifest — a metadata-only commit, so
-        the pre-existing state becomes a readable version."""
+        """Adopt a pre-manifest flat directory as its first manifest — a
+        metadata-only commit, so the pre-existing state becomes a
+        readable version."""
         files = sorted(
             f.name for f in (self.root / table).glob("part-*") if f.is_file()
         )

@@ -136,11 +136,12 @@ def stream_analysis_json(
             k for k in tables if k != "import_stats"
         )
         commit = wh.merge_batch_incremental if incremental else wh.merge_batch
-        commit(
-            {k: v for k, v in tables.items() if k in keep},
-            batch_seq=epoch_id + 1,
-            txn=(txn_app, int(epoch_id)) if txn_app else None,
-        )
+        with tables:
+            commit(
+                {k: v for k, v in tables.items() if k in keep},
+                batch_seq=epoch_id + 1,
+                txn=(txn_app, int(epoch_id)) if txn_app else None,
+            )
         if maintenance_every and (epoch_id + 1) % maintenance_every == 0:
             if auto_rebucket_bytes is not None:
                 for t in keep:

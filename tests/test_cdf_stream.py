@@ -127,3 +127,24 @@ def test_cdf_stream_requires_bucketed_table(spark, tmp_path):
     wh.merge_batch({"functions": _fns(spark, [(1, 1)])})
     with pytest.raises(Exception, match="flat|bucket"):
         _drain(spark, root, "functions")
+
+
+def test_cdf_registration_once_per_session(spark, tmp_path, monkeypatch):
+    """Registering again would replace the session's registration (and
+    log a warning each time): the helper registers only where the
+    session's own registry lacks the source."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    register_warehouse_cdf_datasource(spark)
+    calls: list[object] = []
+    monkeypatch.setattr(
+        DataSourceRegistration, "register", lambda self, ds: calls.append(ds)
+    )
+    register_warehouse_cdf_datasource(spark)
+    assert calls == []
+
+    root = str(tmp_path / "wh")
+    Warehouse(spark, root).merge_batch_incremental(
+        {"functions": _fns(spark, [(1, 1), (2, 2)])}
+    )
+    assert _drain(spark, root, "functions").count() == 2

@@ -455,13 +455,24 @@ def test_db_history_and_streaming_maintenance_cadence(spark, tmp_path, capsys):
     for r in h:
         flat.read("functions", version=r["version"]).count()  # must not raise
 
-    # a never-merged table reports one 'live' row whose version number
-    # read() accepts (the history/read consistency contract)
+    # every history row's version number is one read() accepts (the
+    # history/read consistency contract): a never-merged table is its
+    # initialize() manifest, v0 with no files; a pre-manifest directory
+    # reports one 'live' row
     flat2 = Warehouse(spark, str(tmp_path / "flat2"))
     flat2.initialize()
-    live_h = flat2.history("binaries")
+    h0 = flat2.history("binaries")
+    assert [(r["kind"], r["version"], r["n_files"]) for r in h0] == [("manifest", 0, 0)]
+    assert flat2.read("binaries", version=0).count() == 0
+    from binaryx_graph_spark.sources.warehouse import ALL_TABLES
+
+    legacy = Warehouse(spark, str(tmp_path / "legacy"))
+    spark.createDataFrame([], ALL_TABLES["binaries"][0]).write.parquet(
+        str(legacy.root / "binaries")
+    )
+    live_h = legacy.history("binaries")
     assert [r["kind"] for r in live_h] == ["live"]
-    assert flat2.read("binaries", version=live_h[0]["version"]).count() == 0
+    assert legacy.read("binaries", version=live_h[0]["version"]).count() == 0
 
     # CLI surface
     assert main(["--warehouse", root, "db", "history", "functions"]) == 0

@@ -169,9 +169,14 @@ def test_ingest_atomic_and_cypher_replay(spark, tmp_path):
     from binaryx_graph_spark.engine import Engine
 
     d = write_fixture(tmp_path / "docs")
+    jsc = spark.sparkContext._jsc
+    # an import leaves no cached plan of its own (earlier tests' frames
+    # may be cleaned up meanwhile, so only new entries count)
+    cached = set(jsc.getPersistentRDDs().keySet())
     # atomic lane: catalog pin spans all 10 tables
     e1 = Engine(spark, str(tmp_path / "wh1"))
     v = e1.ingest_atomic(d, txn=("t", 1))
+    assert set(jsc.getPersistentRDDs().keySet()) - cached == set()
     pins = e1.warehouse.catalog_snapshot()
     assert len(pins) == 10
     assert e1.warehouse.read_snapshot("functions", pins).count() == 6
@@ -181,6 +186,7 @@ def test_ingest_atomic_and_cypher_replay(spark, tmp_path):
     # verbatim-Cypher lane equals the direct lane, via the engine API
     e2 = Engine(spark, str(tmp_path / "wh2"))
     e2.cypher_replay_import(d)
+    assert set(jsc.getPersistentRDDs().keySet()) - cached == set()
     for t in ("functions", "calls", "binaries", "strings"):
         a = sorted(tuple(r) for r in e1.table(t).collect())
         b = sorted(tuple(r) for r in e2.table(t).select(*e1.table(t).columns).collect())

@@ -19,6 +19,7 @@ from binaryx_graph_spark.plans.lineage import (
     checkpoint_cut,
     fixed_rounds,
     frontier_levels,
+    release,
 )
 
 
@@ -140,3 +141,16 @@ def test_fixed_rounds_checkpoint_rule(spark):
         else:  # the final state is returned lazily
             assert not _is_checkpoint_scan(out)
         assert sorted(r.v for r in out.collect()) == [rounds, rounds + 1, rounds + 2]
+
+
+def test_release_frees_cache_and_checkpoint_blocks(spark):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    cp = spark.range(10).localCheckpoint(eager=True)
+    cached = spark.range(5).cache()
+    cached.count()
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 2
+    release(cp)
+    release(cached)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    assert cached.count() == 5  # an uncached frame recomputes

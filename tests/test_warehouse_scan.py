@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from binaryx_graph_spark.sources.warehouse import (
+    ALL_TABLES,
     Warehouse,
     _zone_overlaps,
 )
@@ -161,9 +162,21 @@ def test_long_string_stats_dropped_not_truncated(spark, tmp_path):
 
 def test_scan_pre_manifest_table_falls_back_to_full_read(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.clear()  # initialize() writes plain parquet, no manifest
+    # the legacy flat layout: plain parquet under <root>/functions, no manifest
+    spark.createDataFrame([], ALL_TABLES["functions"][0]).write.parquet(
+        str(wh.root / "functions")
+    )
     df, diag = wh.scan("functions", [("size", ">", 0)], with_diagnostics=True)
     assert diag == {"files_total": None, "files_read": None}
+    assert df.count() == 0
+
+
+def test_scan_zero_file_manifest_reads_empty(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.clear()  # initialize(): a v0 manifest listing no files
+    df, diag = wh.scan("functions", [("size", ">", 0)], with_diagnostics=True)
+    assert diag == {"files_total": 0, "files_read": 0}
+    assert df.schema == ALL_TABLES["functions"][0]
     assert df.count() == 0
 
 
