@@ -1674,7 +1674,7 @@ class CypherCompiler:
                 # path), so multiplicity-insensitivity is not enough —
                 # those queries take the per-path plan.
                 if getattr(self, "_varlen_distinct_safe", False) and e.varlen[0] == 1:
-                    pairs = self._varlen_pairs(e.varlen)
+                    pairs = self._varlen_pairs(e.varlen[1])
                 else:
                     pairs = self._varlen_paths(e.varlen)
             else:
@@ -1846,9 +1846,9 @@ class CypherCompiler:
                 acc = acc.unionByName(cur)
         return acc.select("__src", "__dst")
 
-    def _varlen_pairs(self, varlen: tuple[int, int]) -> DataFrame:
+    def _varlen_pairs(self, hi: int) -> DataFrame:
         """DISTINCT (src, dst) pairs connected by a :CALLS path with
-        length in [lo, hi] — frontier iteration with per-level distinct
+        length in [1, hi] — frontier iteration with per-level distinct
         (the reachable() shape; lineage stays hi-bounded).  Used ONLY
         when :meth:`_multiplicity_insensitive` proves the consuming
         clause cannot observe per-path multiplicity AND lo == 1 — the
@@ -1864,28 +1864,20 @@ class CypherCompiler:
         in [1, hi]); at lo >= 2 they can differ (self-loop 1→1: walk of
         length 2 exists, rel-unique path of length 2 does not), so the
         caller never routes lo >= 2 here."""
-        lo, hi = varlen
-        if lo != 1:
-            raise ValueError(
-                "cypher: _varlen_pairs is only walk≡path-correct for lo == 1"
-            )
-        if not (1 <= lo <= hi <= 10):
+        if not (1 <= hi <= 10):
             raise ValueError("cypher: *lo..hi must satisfy 1 <= lo <= hi <= 10")
         edges = self.tables["calls"].select(
             F.col("src_uid").alias("__src"), F.col("dst_uid").alias("__dst")
         ).distinct()
-        level = edges
-        acc = level if lo <= 1 else None
-        for depth in range(2, hi + 1):
+        level = acc = edges
+        for _depth in range(2, hi + 1):
             level = (
                 level.alias("l")
                 .join(edges.alias("e"), F.col("l.__dst") == F.col("e.__src"))
                 .select(F.col("l.__src").alias("__src"), F.col("e.__dst").alias("__dst"))
                 .distinct()
             )
-            if depth >= lo:
-                acc = level if acc is None else acc.unionByName(level)
-        assert acc is not None
+            acc = acc.unionByName(level)
         return acc.distinct()
 
     def _predicate(self, expr, bound: dict[str, str]) -> Column:

@@ -984,9 +984,7 @@ def sql_betweenness_sampled(
     )
 
 
-def scc_bounded(
-    edges: DataFrame, *, max_depth: int = 6, strategy: str = "pairs"
-) -> DataFrame:
+def scc_bounded(edges: DataFrame, *, max_depth: int = 6) -> DataFrame:
     """Strongly connected components by MUTUAL REACHABILITY within
     ``max_depth`` hops → (node, scc_id), scc_id = the minimum node id
     in the component.  u and v share a component iff u →* v AND
@@ -1001,39 +999,15 @@ def scc_bounded(
     sources advance together, never a per-source loop), then mutuality
     is a SELF-join of the pair set against its own swap and scc_id one
     (node)-keyed min aggregate.  Pair count is Σ|reach(v)| — bounded by
-    n·|V| like the (source, v) frames in betweenness; production SCC on
-    a 100 TB graph would move to pivot-based FW-BW once Σ|reach|
-    outgrows the cluster, exactly as IVF supersedes brute-force ANN.
+    n·|V| like the (source, v) frames in betweenness; once Σ|reach|
+    outgrows the cluster, :func:`scc_fwbw` computes EXACT SCCs in
+    O(|V|) state per round (pivot forward/backward partitioning, the
+    escape hatch promoted from SCALE.md addendum 30), exactly as IVF
+    supersedes brute-force ANN.
 
     Every step is set arithmetic on integer pairs — the DuckDB twin
     (:func:`sql_scc_bounded`) replays it with a bounded recursive CTE,
-    bit-for-bit.
-
-    ``strategy`` picks the physical plan (semantics of the RESULT differ
-    only where the bounded estimator under-approximates):
-
-    - ``"pairs"`` (default): the Σ|reach| pair-set above — exact iff
-      ``max_depth`` covers co-component shortest paths.
-    - ``"fwbw"``: :func:`scc_fwbw` — EXACT SCCs by recursive pivot
-      forward/backward partitioning; ``max_depth`` is ignored (closures
-      run to fixpoint).  The 100 TB escape hatch promoted from SCALE.md
-      addendum 30: state never exceeds O(|V|) per round instead of
-      Σ|reach| pairs.
-    - ``"auto"``: ``"pairs"`` while the node count is ≤ 20k (pair set
-      provably ≤ 4·10⁸ and in practice ∝ reachability), else
-      ``"fwbw"``."""
-    if strategy == "auto":
-        n_nodes = (
-            edges.select(F.col("src").alias("v"))
-            .unionByName(edges.select(F.col("dst").alias("v")))
-            .distinct()
-            .count()
-        )
-        strategy = "pairs" if n_nodes <= 20_000 else "fwbw"
-    if strategy == "fwbw":
-        return scc_fwbw(edges)
-    if strategy != "pairs":
-        raise ValueError(f"unknown SCC strategy: {strategy!r}")
+    bit-for-bit."""
     edges = edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long")
     ).distinct().localCheckpoint(eager=True)
@@ -1110,11 +1084,11 @@ def sql_scc_exact(sql_edges: str) -> str:
     """
 
 
-def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> DataFrame:
+def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60) -> DataFrame:
     """EXACT strongly connected components by distributed pivot FW-BW
     (Fleischer/Hendrickson/Pinar 2000) → (node, scc_id), scc_id = the
-    minimum node id in the component — the 100 TB strategy behind
-    ``scc_bounded(strategy="fwbw")``.
+    minimum node id in the component — the 100 TB alternative to
+    :func:`scc_bounded`'s Σ|reach| pair set.
 
     Each outer round first TRIMS: nodes with no incoming or no outgoing
     edge among still-active nodes cannot lie on a cycle and are emitted
@@ -1132,7 +1106,7 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
     by their own minimum node id for the next round.
 
     State: O(|V|) rows per frame (partition map, FW/BW closures) — never
-    the Σ|reach| pair set of the "pairs" strategy; per inner step ONE
+    the Σ|reach| pair set of :func:`scc_bounded`; per inner step ONE
     partition-labeled edge join + anti-join dedup.  Lineage is cut by
     :func:`~binaryx_graph_spark.plans.lineage.checkpoint_cut`, NOT the
     plain localCheckpoint the linear frontier loops use: each FW-BW
@@ -1165,8 +1139,8 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
     )
     # Partition map (v, p); p = min node id of the partition.
     #
-    # seed="wcc" (default): one initial partition PER WEAKLY CONNECTED
-    # COMPONENT (min-member id — exactly the p-invariant), via the
+    # Seeded with one initial partition PER WEAKLY CONNECTED COMPONENT
+    # (min-member id — exactly the p-invariant), via the
     # pointer-jumping CC operator.  FW-BW's partition theorem only
     # splits each partition ≤3 ways per round, so with a single global
     # seed a graph of many disjoint regions (the NORMAL call-graph
@@ -1177,23 +1151,19 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
     # run coloring/WCC first for the same reason); on a connected graph
     # it degenerates to the single global partition at the cost of one
     # O(log d)-round CC pass.
-    gmin = nodes.agg(F.min("v")).collect()[0][0]  # setup-only scalar
-    if gmin is None:
+    if nodes.isEmpty():
         return nodes.select(F.col("v").alias("node"), F.col("v").alias("scc_id"))
-    if seed == "wcc":
-        from .dedup import connected_components as _cc
+    from .dedup import connected_components as _cc
 
-        und = edges.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
-        part = (
-            _cc(und)
-            .select(
-                F.col("doc_id").cast("long").alias("v"),
-                F.col("cluster_id").cast("long").alias("p"),
-            )
-            .transform(_cut)
+    und = edges.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
+    part = (
+        _cc(und)
+        .select(
+            F.col("doc_id").cast("long").alias("v"),
+            F.col("cluster_id").cast("long").alias("p"),
         )
-    else:
-        part = nodes.select("v", F.lit(gmin).cast("long").alias("p")).transform(_cut)
+        .transform(_cut)
+    )
     done: list[DataFrame] = []
 
     def _closure(piv: DataFrame, pedges: DataFrame, src: str, dst: str) -> DataFrame:

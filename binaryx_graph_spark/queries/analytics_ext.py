@@ -1467,8 +1467,8 @@ from ..operators.graphalgo import scc_fwbw, sql_scc_exact  # noqa: E402
 )
 def graph_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT SCCs over the derived call graph via distributed pivot
-    FW-BW (the scc_bounded strategy="fwbw" escape hatch promoted to a
-    gate row): per round every active partition advances together —
+    FW-BW (the exact alternative to scc_bounded's pair set, promoted to
+    a gate row): per round every active partition advances together —
     min-id pivot, partition-internal forward/backward closures to
     fixpoint, SCC = FW ∩ BW, remainders re-keyed by their min node.
     State is O(|V|) per frame (never the Σ|reach| pair set), the 100 TB

@@ -31,6 +31,7 @@ from ..fixtures.micro_graph import (
     write_fixture,
 )
 from ..registry import register
+from ._harness import scratch_root
 
 _REPLAY_CACHE: dict[str, object] = {}
 
@@ -67,6 +68,7 @@ def _replayed_warehouse(spark: SparkSession):
     sessions re-open it (~0.2s) — the parity assertion ran when the
     directory was built, and the hash key guarantees it still holds."""
     import os
+    import shutil
 
     from ..operators.cypher_import import replay_reference_import
     from ..operators.ingest import build_graph_tables
@@ -79,8 +81,8 @@ def _replayed_warehouse(spark: SparkSession):
 
     root = Path(tempfile.gettempdir()) / f"bxg_cywrite_wh_{_replay_version()}"
     if not root.exists():
-        d = write_fixture(Path(tempfile.mkdtemp(prefix="bxg_cywrite_docs_")))
-        docs = read_analysis_json(spark, d)
+        docs_dir = tempfile.mkdtemp(prefix="bxg_cywrite_docs_")
+        docs = read_analysis_json(spark, write_fixture(docs_dir))
         stage = tempfile.mkdtemp(prefix="bxg_cywrite_stage_")
         wh = Warehouse(spark, stage)
         wh.initialize()
@@ -99,9 +101,10 @@ def _replayed_warehouse(spark: SparkSession):
                         f"'{table}': {got} != {exp}"
                     )
         try:
-            os.rename(stage, root)  # atomic publish; race loser keeps stage
+            os.rename(stage, root)  # atomic publish
         except OSError:
-            pass
+            shutil.rmtree(stage)  # lost the race: the winner's copy is the cache
+        shutil.rmtree(docs_dir)
     _REPLAY_CACHE[key] = Warehouse(spark, str(root))
     return _REPLAY_CACHE[key]
 
@@ -174,7 +177,7 @@ def cypher_write_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cypher import cypher_write
     from ..sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="bxg_cyupsert_"))
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_cyupsert_scratch"))
     wh.initialize()
     tpl = """
         MERGE (b:Binary {hash: $hash})
@@ -219,7 +222,7 @@ def cypher_write_detach_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cypher import cypher_write, cypher_write_batch
     from ..sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="bxg_cydelete_"))
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_cydelete_scratch"))
     wh.initialize()
     fns = spark.createDataFrame(
         [("a", "fa", "0x1", "Internal", 1, 1),
@@ -294,7 +297,7 @@ def cypher_write_unwind_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cypher import cypher_write
     from ..sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="bxg_cyunwind_"))
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_cyunwind_scratch"))
     wh.initialize()
     r = cypher_write(
         wh,
@@ -355,7 +358,8 @@ def cypher_write_on_create_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("u_fresh2", "fresh2", 6),
     ]
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="bxg_cyarms_"))
+    root = scratch_root(sf_dir, "bxg_cyarms_scratch")
+    wh = Warehouse(spark, f"{root}/batch")
     wh.initialize()
     cypher_write(
         wh,
@@ -366,7 +370,7 @@ def cypher_write_on_create_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     cypher_write_batch(wh, tpl, params)
 
     # single-statement twin: one cypher_write per row must agree
-    wh2 = Warehouse(spark, tempfile.mkdtemp(prefix="bxg_cyarms1_"))
+    wh2 = Warehouse(spark, f"{root}/single")
     wh2.initialize()
     cypher_write(
         wh2,
@@ -404,7 +408,7 @@ def cypher_write_set_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cypher import cypher_write
     from ..sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="bxg_cymap_"))
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_cymap_scratch"))
     wh.initialize()
     cypher_write(
         wh,

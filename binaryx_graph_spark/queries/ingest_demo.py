@@ -10,6 +10,8 @@ dedup — so any regression in those operators breaks the value hash.
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 from pathlib import Path
 
@@ -30,6 +32,7 @@ from ..fixtures.micro_graph import (
 from ..operators.ingest import build_graph_tables
 from ..registry import register
 from ..sources.json_source import read_analysis_json
+from ._harness import function_rows, phase_rows, scratch_root, snap
 
 _CACHE: dict[str, dict[str, DataFrame]] = {}
 
@@ -65,20 +68,19 @@ def graph_tables(spark: SparkSession) -> dict[str, DataFrame]:
     if key in _CACHE:
         return _CACHE[key]
 
-    import os
-
     root = Path(tempfile.gettempdir()) / f"bxg_fixture_wh_{_fixture_version()}"
     if not root.exists():
-        d = write_fixture(Path(tempfile.mkdtemp(prefix="bxg_fixture_")))
-        docs = read_analysis_json(spark, d)
+        docs_dir = tempfile.mkdtemp(prefix="bxg_fixture_")
+        docs = read_analysis_json(spark, write_fixture(docs_dir))
         stage = Path(tempfile.mkdtemp(prefix="bxg_fixture_stage_"))
         with build_graph_tables(docs) as tables:
             for name in _FIXTURE_TABLES:
                 tables[name].coalesce(1).write.mode("overwrite").parquet(str(stage / name))
         try:
-            os.rename(stage, root)  # atomic publish; loser of a race keeps its stage
+            os.rename(stage, root)  # atomic publish
         except OSError:
-            pass
+            shutil.rmtree(stage)  # lost the race: the winner's copy is the cache
+        shutil.rmtree(docs_dir)
     _CACHE[key] = {
         name: spark.read.parquet(str(root / name)).cache() for name in _FIXTURE_TABLES
     }
@@ -160,8 +162,6 @@ def ingest_merge_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet warehouse merge path, not just the in-batch dedup."""
     import copy
     import json
-    import tempfile
-    from pathlib import Path
 
     from ..fixtures.micro_graph import DOC_A
     from ..sources.warehouse import Warehouse
@@ -169,8 +169,8 @@ def ingest_merge_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     _NODE_TABLES = ["binaries", "functions", "strings", "libraries"]
     key = f"merge_{id(spark)}"
     if key not in _CACHE:
-        root = Path(tempfile.mkdtemp(prefix="bxg_merge_")) / "wh"
-        wh = Warehouse(spark, str(root))
+        root = Path(scratch_root(sf_dir, "bxg_merge_scratch"))
+        wh = Warehouse(spark, str(root / "wh"))
         # no initialize(): merge_batch creates tables on first write,
         # skipping 10 empty-table write jobs
         batch1 = graph_tables(spark)
@@ -179,7 +179,8 @@ def ingest_merge_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_a2 = copy.deepcopy(DOC_A)
         doc_a2["binary_info"]["name"] = "mal_a_v2.exe"
         doc_a2["binary_info"]["file_size"] = 8192
-        d2 = Path(tempfile.mkdtemp(prefix="bxg_merge_in2_"))
+        d2 = root / "in2"
+        d2.mkdir()
         (d2 / "a2.json").write_text(json.dumps(doc_a2))
         docs2 = read_analysis_json(spark, str(d2))
         with build_graph_tables(docs2) as batch2:
@@ -215,7 +216,7 @@ def python_datasource_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.pyds import register_analysis_datasource
 
     register_analysis_datasource(spark)
-    d = write_fixture(Path(tempfile.mkdtemp(prefix="bxg_pyds_")))
+    d = write_fixture(scratch_root(sf_dir, "bxg_pyds_scratch"))
     return (
         spark.read.format("analysis_json_py")
         .option("path", d)
@@ -244,14 +245,11 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop pins the offset/commit/replay contract end-to-end:
     exactly-once delivery of the full bounded feed across restarts,
     aggregated and checked against the feed formula replayed in SQL."""
-    import tempfile
-    from pathlib import Path
-
     from ..sources.pyds import register_event_feed_datasource
 
     register_event_feed_datasource(spark)
-    base = Path(tempfile.mkdtemp(prefix="bxg_pyfeed_"))
-    out, ckpt = str(base / "out"), str(base / "ckpt")
+    base = scratch_root(sf_dir, "bxg_pyfeed_scratch")
+    out, ckpt = f"{base}/out", f"{base}/ckpt"
     prev = -1
     for _ in range(12):  # bounded restart loop; stops when no progress
         q = (
@@ -335,7 +333,8 @@ def warehouse_lifecycle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batching invisible — and return to zero after clear."""
     from ..sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="bxg_lifecycle_"))
+    root = scratch_root(sf_dir, "bxg_lifecycle_scratch")
+    wh = Warehouse(spark, f"{root}/wh")
     wh.initialize()
     watched = ["binaries", "functions", "strings", "calls"]
 
@@ -343,7 +342,7 @@ def warehouse_lifecycle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [(name, t, wh.read(t).count()) for t in watched]
 
     rows = phase("1_init")
-    fixture_dir = Path(write_fixture(tempfile.mkdtemp(prefix="bxg_lifecycle_in_")))
+    fixture_dir = Path(write_fixture(f"{root}/in"))
     # E12: one JSON file per chunk, ascending batch_seq — the CLI's
     # --chunk-size=1 execution shape
     for seq, f in enumerate(sorted(fixture_dir.glob("*.json")), start=1):
@@ -434,7 +433,7 @@ def ingest_validation_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..fixtures.micro_graph import write_validation_fixture
     from ..sources.json_source import validate_raw_json
 
-    d = write_validation_fixture(tempfile.mkdtemp(prefix="bxg_validate_"))
+    d = write_validation_fixture(scratch_root(sf_dir, "bxg_validate_scratch"))
     errs = validate_raw_json(spark, d)
     return (
         errs.groupBy("error")
@@ -469,7 +468,7 @@ def ingest_validation_null_arrays(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..fixtures.micro_graph import write_validation_nulls_fixture
     from ..sources.json_source import validate_raw_json
 
-    d = write_validation_nulls_fixture(tempfile.mkdtemp(prefix="bxg_validate_n_"))
+    d = write_validation_nulls_fixture(scratch_root(sf_dir, "bxg_validate_n_scratch"))
     errs = validate_raw_json(spark, d)
     return (
         errs.groupBy("error")
@@ -506,9 +505,11 @@ def streaming_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest_stream import stream_analysis_json
 
     watched = ("binaries", "functions", "strings", "calls")
-    fixture = write_fixture(tempfile.mkdtemp(prefix="bxg_sting_in_"))
-    root = tempfile.mkdtemp(prefix="bxg_sting_wh_")
     from ..sources.warehouse import Warehouse
+
+    scratch = scratch_root(sf_dir, "bxg_sting_scratch")
+    fixture = write_fixture(f"{scratch}/in")
+    root = f"{scratch}/wh"
 
     rows: list[tuple] = []
     for phase in ("1_stream", "2_replay"):
@@ -559,25 +560,14 @@ def warehouse_compaction_certified(spark: SparkSession, sf_dir: str) -> DataFram
     fewer files (reference parity: Neo4j's store compaction is implicit;
     schema.rs:13-76 constraints are the dedup invariants optimize must
     preserve, enforced here by the key-hash repartition)."""
-    import hashlib
-    import os
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_compact_scratch", key)
+    root = scratch_root(sf_dir, "bxg_compact_scratch")
     wh = Warehouse(spark, root)
-    wh.clear()  # idempotent re-runs: same path, fresh state
 
     orders = load_table(spark, sf_dir, "orders")
-    fns = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        (F.col("o_orderkey") % 997).cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
+    fns = function_rows(orders, F.col("o_orderkey") % 997)
     calls = orders.select(
         (F.col("o_orderkey") % 500).cast("string").alias("src_uid"),
         ((F.col("o_custkey") * 13) % 500).cast("string").alias("dst_uid"),
@@ -600,8 +590,6 @@ def warehouse_compaction_certified(spark: SparkSession, sf_dir: str) -> DataFram
     # explicitly: fragment each live table to 48 files, the state a few
     # merge rounds leave behind on a real cluster.  optimize() must undo
     # exactly this without changing a single value.
-    import shutil
-
     watched = ("functions", "calls")
     for t in watched:
         tmp_frag = os.path.join(root, f"_{t}_frag")
@@ -627,20 +615,11 @@ def warehouse_compaction_certified(spark: SparkSession, sf_dir: str) -> DataFram
                 f"compaction did not certify for {t}: files {before[t]} -> {a}"
             )
 
-    fn_row = wh.read("functions").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-    ).collect()[0]
-    call_row = wh.read("calls").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.col("src_uid").cast("long") * 1000 + F.col("dst_uid").cast("long")
-        ).alias("checksum"),
-    ).collect()[0]
+    edges = wh.read("calls").withColumn(
+        "edge", F.col("src_uid").cast("long") * 1000 + F.col("dst_uid").cast("long")
+    )
     return spark.createDataFrame(
-        [
-            ("calls", call_row["n"], call_row["checksum"]),
-            ("functions", fn_row["n"], fn_row["checksum"]),
-        ],
+        [("calls", *snap(edges, "edge")), ("functions", *snap(wh.read("functions")))],
         "tbl string, n long, checksum long",
     ).orderBy("tbl")
 
@@ -695,36 +674,21 @@ def warehouse_time_travel_certified(spark: SparkSession, sf_dir: str) -> DataFra
     one mutable state); this is the table-format-lite contract
     (Delta/Iceberg read-at-version, rollback-as-commit, vacuum) a
     100 TB warehouse needs for reproducible training snapshots."""
-    import hashlib
-    import os
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_timetravel_scratch", key)
+    root = scratch_root(sf_dir, "bxg_timetravel_scratch")
     wh = Warehouse(spark, root)
-    wh.clear()
+    wh.initialize()  # v0 manifests: the merges below commit v1 and v2
 
     orders = load_table(spark, sf_dir, "orders")
-
-    def fns(pred_col, size_mod):
-        return orders.filter(pred_col).select(
-            F.col("o_orderkey").cast("string").alias("uid"),
-            F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-            F.lit("").alias("address"),
-            (F.col("o_orderkey") % size_mod).cast("long").alias("size"),
-            F.lit("Internal").alias("type"),
-        )
-
-    wh.merge_batch({"functions": fns(F.col("o_orderkey") % 2 == 0, 997)}, batch_seq=1)
-    wh.merge_batch({"functions": fns(F.col("o_orderkey") % 3 == 0, 991)}, batch_seq=2)
-
-    def snap(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"])
+    k = F.col("o_orderkey")
+    wh.merge_batch(
+        {"functions": function_rows(orders.filter(k % 2 == 0), k % 997)}, batch_seq=1
+    )
+    wh.merge_batch(
+        {"functions": function_rows(orders.filter(k % 3 == 0), k % 991)}, batch_seq=2
+    )
 
     live_n, live_c = snap(wh.read("functions"))
     v1_n, v1_c = snap(wh.read("functions", version=1))
@@ -762,15 +726,15 @@ def warehouse_time_travel_certified(spark: SparkSession, sf_dir: str) -> DataFra
             f"vacuum reachable-set mismatch: {len(on_disk - reach)} orphans, "
             f"{len(reach - on_disk)} missing"
         )
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_live_after_merge2", live_n, live_c),
             ("2_snapshot_v1", v1_n, v1_c),
             ("3_live_after_rollback", rb_n, rb_c),
             ("4_versions_after_vacuum", len(vs), 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -810,37 +774,15 @@ def warehouse_incremental_merge_certified(spark: SparkSession, sf_dir: str) -> D
     ≡ 0 mod 9973 get the batch's size, everything else keeps the base's).
     Per-bucket LWW == global LWW because the bucket is a function of
     the merge key."""
-    import hashlib
-    import os
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_incmerge_scratch", key)
+    root = scratch_root(sf_dir, "bxg_incmerge_scratch")
     wh = Warehouse(spark, root)
-    wh.clear()
 
     orders = load_table(spark, sf_dir, "orders")
-
-    def fns(pred, size_mod):
-        sel = orders.filter(pred) if pred is not None else orders
-        return sel.select(
-            F.col("o_orderkey").cast("string").alias("uid"),
-            F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-            F.lit("").alias("address"),
-            (F.col("o_orderkey") % size_mod).cast("long").alias("size"),
-            F.lit("Internal").alias("type"),
-        )
-
-    wh.merge_batch_incremental({"functions": fns(None, 997)}, batch_seq=1)
-
-    def snap(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"])
-
+    k = F.col("o_orderkey")
+    wh.merge_batch_incremental({"functions": function_rows(orders, k % 997)}, batch_seq=1)
     base_n, base_c = snap(wh.read("functions"))
 
     table_dir = Path(root) / "functions"
@@ -854,7 +796,7 @@ def warehouse_incremental_merge_certified(spark: SparkSession, sf_dir: str) -> D
 
     before = stat_map()
     touched = wh.merge_batch_incremental(
-        {"functions": fns(F.col("o_orderkey") % 9973 == 0, 991)}, batch_seq=2
+        {"functions": function_rows(orders.filter(k % 9973 == 0), k % 991)}, batch_seq=2
     )["functions"]
     after = stat_map()
     changed_dirs = {
@@ -869,10 +811,9 @@ def warehouse_incremental_merge_certified(spark: SparkSession, sf_dir: str) -> D
             f"changed, {touched} reported touched, {len(all_dirs)} total"
         )
     inc_n, inc_c = snap(wh.read("functions"))
-    return spark.createDataFrame(
-        [("1_after_base", base_n, base_c), ("2_after_increment", inc_n, inc_c)],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    return phase_rows(
+        spark, [("1_after_base", base_n, base_c), ("2_after_increment", inc_n, inc_c)]
+    )
 
 
 @register(
@@ -942,35 +883,14 @@ def warehouse_manifest_time_travel_certified(spark: SparkSession, sf_dir: str) -
     `orders`: live-after-c3, read(version=base), read(version=c2) —
     time travel ACROSS incremental commits, the capability r7's
     directory-snapshot versioning lost on the incremental path."""
-    import hashlib
-    import os
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_manifest_scratch", key)
+    root = scratch_root(sf_dir, "bxg_manifest_scratch")
     wh = Warehouse(spark, root)
-    wh.clear()
 
     orders = load_table(spark, sf_dir, "orders")
-
-    def fns(pred, size_mod):
-        sel = orders.filter(pred) if pred is not None else orders
-        return sel.select(
-            F.col("o_orderkey").cast("string").alias("uid"),
-            F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-            F.lit("").alias("address"),
-            (F.col("o_orderkey") % size_mod).cast("long").alias("size"),
-            F.lit("Internal").alias("type"),
-        )
-
-    def snap(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"])
-
+    k = F.col("o_orderkey")
     table_dir = Path(root) / "functions"
     manifest_dir = Path(root) / "_manifests" / "functions"
 
@@ -981,19 +901,18 @@ def warehouse_manifest_time_travel_certified(spark: SparkSession, sf_dir: str) -
             if p.is_file()
         }
 
-    wh.merge_batch_incremental({"functions": fns(None, 997)}, batch_seq=1)
+    wh.merge_batch_incremental({"functions": function_rows(orders, k % 997)}, batch_seq=1)
     v_base = wh.versions("functions")[-1]
     wh.merge_batch_incremental(
-        {"functions": fns(F.col("o_orderkey") % 9973 == 0, 991)}, batch_seq=2
+        {"functions": function_rows(orders.filter(k % 9973 == 0), k % 991)}, batch_seq=2
     )
     v_c2 = wh.versions("functions")[-1]
 
     # commit 3 under the stat microscope: immutable data files, one
     # new manifest = the commit
     data_before, man_before = stat_map(table_dir), stat_map(manifest_dir)
-    wh.merge_batch_incremental(
-        {"functions": fns(F.col("o_orderkey") % 7919 == 0, 983)}, batch_seq=3
-    )
+    c3 = function_rows(orders.filter(k % 7919 == 0), k % 983)
+    wh.merge_batch_incremental({"functions": c3}, batch_seq=3)
     data_after, man_after = stat_map(table_dir), stat_map(manifest_dir)
     mutated = {p for p in data_before if data_after.get(p) != data_before[p]}
     if mutated:
@@ -1019,9 +938,7 @@ def warehouse_manifest_time_travel_certified(spark: SparkSession, sf_dir: str) -
     rb_n, rb_c = snap(wh.read("functions"))
 
     # recommit the third batch after the rollback → third state again
-    wh.merge_batch_incremental(
-        {"functions": fns(F.col("o_orderkey") % 7919 == 0, 983)}, batch_seq=4
-    )
+    wh.merge_batch_incremental({"functions": c3}, batch_seq=4)
     rc_n, rc_c = snap(wh.read("functions"))
     if (rc_n, rc_c) != (live_n, live_c):
         raise AssertionError(
@@ -1054,7 +971,8 @@ def warehouse_manifest_time_travel_certified(spark: SparkSession, sf_dir: str) -
         raise AssertionError("expired version still readable after vacuum")
     except FileNotFoundError:
         pass
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_live_after_c3", live_n, live_c),
             ("2_timetravel_base", vb_n, vb_c),
@@ -1063,8 +981,7 @@ def warehouse_manifest_time_travel_certified(spark: SparkSession, sf_dir: str) -
             ("5_recommit_equals_c3", rc_n, rc_c),
             ("6_versions_after_vacuum", len(vs), 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -1117,16 +1034,10 @@ def warehouse_concurrent_commit_certified(spark: SparkSession, sf_dir: str) -> D
       staged files are invisible orphans;
     - the final live state replays exactly in DuckDB from `orders`.
     """
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import ConcurrentCommitError, Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_concurrency_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_concurrency_scratch")
 
     class Interleaved(Warehouse):
         """Runs an injected action (the other writer winning the race)
@@ -1142,25 +1053,13 @@ def warehouse_concurrent_commit_certified(spark: SparkSession, sf_dir: str) -> D
 
     a, b = Interleaved(spark, root), Warehouse(spark, root)
     orders = load_table(spark, sf_dir, "orders")
-    base_fns = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        (F.col("o_orderkey") % 997).cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
+    base_fns = function_rows(orders, F.col("o_orderkey") % 997)
 
     def one(uid: str, size: int) -> DataFrame:
         return spark.createDataFrame(
             [(uid, f"fn_{uid}", "", size, "Internal")],
             "uid string, name string, address string, size long, type string",
         )
-
-    def snap(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"])
 
     def bucket_of(uid: str) -> int:
         return (
@@ -1215,15 +1114,15 @@ def warehouse_concurrent_commit_certified(spark: SparkSession, sf_dir: str) -> D
         raise AssertionError("winner's value not live after the rejected race")
     f_n, f_c = snap(a.read("functions"))
 
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_base", base_n, base_c),
             ("2_disjoint_serialized", d_n, d_c),
             ("3_overlap_rejected", rejected, 0),
             ("4_final_live", f_n, f_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -1275,36 +1174,13 @@ def warehouse_rebucket_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
       (every 3rd key) last-write-wins with NO duplicate keys — the
       exact invariant a silent modulus change would break.
     """
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_rebucket_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_rebucket_scratch"))
     orders = load_table(spark, sf_dir, "orders")
-
-    def fns(pred, size_mod):
-        sel = orders.filter(pred) if pred is not None else orders
-        return sel.select(
-            F.col("o_orderkey").cast("string").alias("uid"),
-            F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-            F.lit("").alias("address"),
-            (F.col("o_orderkey") % size_mod).cast("long").alias("size"),
-            F.lit("Internal").alias("type"),
-        )
-
-    def snap(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"])
-
-    wh.merge_batch_incremental({"functions": fns(None, 997)}, batch_seq=1)
+    k = F.col("o_orderkey")
+    wh.merge_batch_incremental({"functions": function_rows(orders, k % 997)}, batch_seq=1)
     v_old = wh.versions("functions")[-1]
     base_n, base_c = snap(wh.read("functions"))
 
@@ -1321,7 +1197,7 @@ def warehouse_rebucket_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     tt_n, tt_c = snap(wh.read("functions", version=v_old))
 
     wh.merge_batch_incremental(
-        {"functions": fns(F.col("o_orderkey") % 3 == 0, 991)}, batch_seq=2
+        {"functions": function_rows(orders.filter(k % 3 == 0), k % 991)}, batch_seq=2
     )
     live = wh.read("functions")
     n_rows, n_keys = live.count(), live.select("uid").distinct().count()
@@ -1331,15 +1207,15 @@ def warehouse_rebucket_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ov_n, ov_c = snap(live)
 
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_base", base_n, base_c),
             ("2_after_rebucket", rb_n, rb_c),
             ("3_timetravel_old", tt_n, tt_c),
             ("4_live_after_overlay", ov_n, ov_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -1401,37 +1277,14 @@ def warehouse_zonemap_scan_certified(spark: SparkSession, sf_dir: str) -> DataFr
       ONE bucket's file count, not the table's.
 
     Counts + integer checksums replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_zonemap_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_zonemap_scratch"))
     orders = load_table(spark, sf_dir, "orders")
 
-    def fns(pred, size_col):
-        sel = orders.filter(pred) if pred is not None else orders
-        return sel.select(
-            F.col("o_orderkey").cast("string").alias("uid"),
-            F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-            F.lit("").alias("address"),
-            size_col.cast("long").alias("size"),
-            F.lit("Internal").alias("type"),
-        )
-
-    def snap(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"] or 0)
-
     # base commit, then cluster on `size` targeting ~8 files at ANY sf
-    wh.merge_batch({"functions": fns(None, F.col("o_orderkey"))})
+    wh.merge_batch({"functions": function_rows(orders)})
     m0 = wh._manifest("functions", wh.versions("functions")[-1])
     target = max(4096, sum(m0["bytes"].values()) // 8)
     wh.optimize(target_bytes=target, cluster_by={"functions": ["size"]})
@@ -1471,13 +1324,9 @@ def warehouse_zonemap_scan_certified(spark: SparkSession, sf_dir: str) -> DataFr
 
     # convert to the bucketed layout with an overlay batch (every 5th
     # key rewritten), then the same range scan on the LWW state
+    k = F.col("o_orderkey")
     wh.merge_batch_incremental(
-        {
-            "functions": fns(
-                F.col("o_orderkey") % 5 == 0, F.col("o_orderkey") % 977
-            )
-        },
-        batch_seq=2,
+        {"functions": function_rows(orders.filter(k % 5 == 0), k % 977)}, batch_seq=2
     )
     inc_n, inc_c = snap(wh.scan("functions", preds))
 
@@ -1494,14 +1343,14 @@ def warehouse_zonemap_scan_certified(spark: SparkSession, sf_dir: str) -> DataFr
             f"point lookup did not prune to one bucket: {pdiag}, "
             f"max bucket files {biggest_bucket}"
         )
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_flat_range_scan", flat_n, flat_c),
             ("2_bucketed_range_scan", inc_n, inc_c),
             ("3_point_lookup", pt_n, pt_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -1560,17 +1409,10 @@ def warehouse_cdc_read_changes_certified(spark: SparkSession, sf_dir: str) -> Da
 
     Insert/delete counts + integer checksums replay in DuckDB from
     `orders` via the same EXCEPT ALL algebra."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_cdc_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_cdc_scratch"))
     orders = load_table(spark, sf_dir, "orders")
 
     def fns(df_keys):
@@ -1604,13 +1446,6 @@ def warehouse_cdc_read_changes_certified(spark: SparkSession, sf_dir: str) -> Da
     if not (0 < diag["buckets_read"] < diag["buckets_total"]):
         raise AssertionError(f"CDC diff not bucket-pruned: {diag}")
     ch = ch.localCheckpoint(eager=True)  # scanned for 2 phases + identity
-
-    def snap(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"] or 0)
-
     ins = ch.filter(F.col("_change") == "insert").drop("_change")
     dels = ch.filter(F.col("_change") == "delete").drop("_change")
     ins_n, ins_c = snap(ins)
@@ -1625,14 +1460,14 @@ def warehouse_cdc_read_changes_certified(spark: SparkSession, sf_dir: str) -> Da
             f"apply-identity violated: {residual} residual rows after "
             f"old - deletes + inserts"
         )
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_inserts", ins_n, ins_c),
             ("2_deletes", del_n, del_c),
             ("3_apply_identity_residual", residual, 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -1677,8 +1512,9 @@ def warehouse_exactly_once_replay_certified(spark: SparkSession, sf_dir: str) ->
     from ..streaming.ingest_stream import stream_analysis_json
 
     watched = ("binaries", "functions", "strings", "calls")
-    fixture = write_fixture(tempfile.mkdtemp(prefix="bxg_eo_in_"))
-    root = tempfile.mkdtemp(prefix="bxg_eo_wh_")
+    scratch = scratch_root(sf_dir, "bxg_eo_scratch")
+    fixture = write_fixture(f"{scratch}/in")
+    root = f"{scratch}/wh"
 
     def run():
         q = stream_analysis_json(
@@ -1779,33 +1615,17 @@ def warehouse_schema_evolution_certified(spark: SparkSession, sf_dir: str) -> Da
 
     Counts + checksums of evolved rows, null-backfilled rows, and the
     time-traveled base replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_schemaevo_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_schemaevo_scratch")
     wh = Warehouse(spark, root)
     orders = load_table(spark, sf_dir, "orders")
 
-    base = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        (F.col("o_orderkey") % 997).cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    overlay = orders.filter(F.col("o_orderkey") % 1999 == 0).select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        (F.col("o_orderkey") % 983).cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-        F.concat(F.lit("v"), (F.col("o_orderkey") % 7).cast("string")).alias("lang"),
+    k = F.col("o_orderkey")
+    base = function_rows(orders, k % 997)
+    overlay = function_rows(orders.filter(k % 1999 == 0), k % 983).withColumn(
+        "lang", F.concat(F.lit("v"), (F.col("uid").cast("long") % 7).cast("string"))
     )
 
     wh.merge_batch_incremental({"functions": base}, batch_seq=1)
@@ -1854,23 +1674,17 @@ def warehouse_schema_evolution_certified(spark: SparkSession, sf_dir: str) -> Da
     except ValueError:
         pass
 
-    def snap(df):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"] or 0)
-
     ev_n, ev_c = snap(live.filter(F.col("lang").isNotNull()))
     nu_n, nu_c = snap(live.filter(F.col("lang").isNull()))
     tt_n, tt_c = snap(tt)
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_evolved_rows", ev_n, ev_c),
             ("2_null_backfill", nu_n, nu_c),
             ("3_timetravel_base", tt_n, tt_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -1919,27 +1733,13 @@ def warehouse_zorder_scan_certified(spark: SparkSession, sf_dir: str) -> DataFra
     fewer files than the manifest lists while matching
     ``read().filter(...)`` exactly (compared in-gate).  Counts +
     cross-dimension checksums replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_zorder_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_zorder_scratch"))
     orders = load_table(spark, sf_dir, "orders")
 
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-        ((F.col("o_orderkey") * 7919) % 1000000).cast("long").alias("size2"),
-    )
+    df = function_rows(orders).withColumn("size2", (F.col("size") * 7919) % 1000000)
     wh.merge_batch({"functions": df}, allow_new_columns=True)
     m0 = wh._manifest("functions", wh.versions("functions")[-1])
     target = max(4096, sum(m0["bytes"].values()) // 16)
@@ -1959,29 +1759,17 @@ def warehouse_zorder_scan_certified(spark: SparkSession, sf_dir: str) -> DataFra
         scanned, diag = wh.scan("functions", preds, with_diagnostics=True)
         if not (1 <= diag["files_read"] < diag["files_total"]):
             raise AssertionError(f"z-order scan did not prune for {preds}: {diag}")
-        r = scanned.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(sum_col).alias("c")
-        ).collect()[0]
-        full = Warehouse._apply_predicates(wh.read("functions"), preds)
-        fr = full.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(sum_col).alias("c")
-        ).collect()[0]
-        if (r["n"], r["c"]) != (fr["n"], fr["c"]):
+        got = snap(scanned, sum_col)
+        full = snap(Warehouse._apply_predicates(wh.read("functions"), preds), sum_col)
+        if got != full:
             raise AssertionError(
-                f"scan diverged from read().filter for {preds}: "
-                f"{(r['n'], r['c'])} != {(fr['n'], fr['c'])}"
+                f"scan diverged from read().filter for {preds}: {got} != {full}"
             )
-        return int(r["n"]), int(r["c"] or 0)
+        return got
 
-    d1_n, d1_c = certified_scan([("size", "between", (lo, hi))], "size2")
-    d2_n, d2_c = certified_scan([("size2", "between", (100000, 300000))], "size")
-    return spark.createDataFrame(
-        [
-            ("1_dim1_range_scan", d1_n, d1_c),
-            ("2_dim2_range_scan", d2_n, d2_c),
-        ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    d1 = certified_scan([("size", "between", (lo, hi))], "size2")
+    d2 = certified_scan([("size2", "between", (100000, 300000))], "size")
+    return phase_rows(spark, [("1_dim1_range_scan", *d1), ("2_dim2_range_scan", *d2)])
 
 
 @register(
@@ -2028,25 +1816,17 @@ def warehouse_bloom_scan_certified(spark: SparkSession, sf_dir: str) -> DataFram
     Counts + checksums replay in DuckDB from `orders` (the oracle never
     needs md5 — equality on the injective hash selects exactly the
     min-key row)."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_bloom_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root, bloom_columns={"functions": ["name"]})
+    wh = Warehouse(
+        spark,
+        scratch_root(sf_dir, "bxg_bloom_scratch"),
+        bloom_columns={"functions": ["name"]},
+    )
     orders = load_table(spark, sf_dir, "orders")
-
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.md5(F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        (F.col("o_orderkey") % 997).cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
+    df = function_rows(orders, F.col("o_orderkey") % 997).withColumn(
+        "name", F.md5("uid")
     )
     wh.merge_batch_incremental({"functions": df})
     m = wh._manifest("functions", wh.versions("functions")[-1])
@@ -2070,10 +1850,7 @@ def warehouse_bloom_scan_certified(spark: SparkSession, sf_dir: str) -> DataFram
     hit, d1 = wh.scan("functions", [("name", "=", target)], with_diagnostics=True)
     if not (d1["files_read"] <= budget < d1["files_total"]):
         raise AssertionError(f"bloom point scan did not prune: {d1}")
-    r = hit.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-    ).collect()[0]
-    hit_n, hit_c = int(r["n"]), int(r["c"] or 0)
+    hit_n, hit_c = snap(hit)
 
     miss, d2 = wh.scan(
         "functions", [("name", "=", "definitely_not_a_hash")], with_diagnostics=True
@@ -2083,10 +1860,9 @@ def warehouse_bloom_scan_certified(spark: SparkSession, sf_dir: str) -> DataFram
     miss_n = miss.count()
     if miss_n:
         raise AssertionError(f"absent value returned {miss_n} rows")
-    return spark.createDataFrame(
-        [("1_point_hit", hit_n, hit_c), ("2_definitely_absent", miss_n, 0)],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    return phase_rows(
+        spark, [("1_point_hit", hit_n, hit_c), ("2_definitely_absent", miss_n, 0)]
+    )
 
 
 @register(
@@ -2143,27 +1919,12 @@ def warehouse_delete_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Remaining rows, the deleted set, and the pre-delete state replay
     in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_delete_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_delete_scratch"))
     orders = load_table(spark, sf_dir, "orders")
-
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    wh.merge_batch({"functions": df})
+    wh.merge_batch({"functions": function_rows(orders)})
     m0 = wh._manifest("functions", wh.versions("functions")[-1])
     target = max(4096, sum(m0["bytes"].values()) // 8)
     wh.optimize(target_bytes=target, cluster_by={"functions": ["size"]})
@@ -2179,12 +1940,6 @@ def warehouse_delete_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = wh.delete_where("functions", [("size", "between", (lo, hi))])
     if not (1 <= d["files_rewritten"] < d["files_total"]):
         raise AssertionError(f"delete was not file-granular: {d}")
-
-    def snap(df_):
-        r = df_.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"] or 0)
 
     rem_n, rem_c = snap(wh.read("functions"))
     ch = wh.read_changes("functions", v_pre)
@@ -2204,14 +1959,14 @@ def warehouse_delete_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not diag["files_read"] < diag["files_total"]:
         raise AssertionError(f"post-delete scan lost its pruning: {diag}")
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_remaining_after_delete", rem_n, rem_c),
             ("2_cdc_deleted_rows", del_n, del_c),
             ("3_timetravel_pre_delete", tt_n, tt_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -2260,27 +2015,12 @@ def warehouse_update_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDC across the update reports exactly one delete+insert pair per
     updated row.  Updated rows, untouched rows, and the pre-update
     state replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_update_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_update_scratch"))
     orders = load_table(spark, sf_dir, "orders")
-
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    wh.merge_batch({"functions": df})
+    wh.merge_batch({"functions": function_rows(orders)})
     m0 = wh._manifest("functions", wh.versions("functions")[-1])
     target = max(4096, sum(m0["bytes"].values()) // 8)
     wh.optimize(target_bytes=target, cluster_by={"functions": ["size"]})
@@ -2316,23 +2056,17 @@ def warehouse_update_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{counts} vs rows_updated={d['rows_updated']}"
         )
 
-    def snap(df_):
-        r = df_.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"] or 0)
-
     up_n, up_c = snap(live.filter(F.col("type") == "External"))
     un_n, un_c = snap(live.filter(F.col("type") == "Internal"))
     tt_n, tt_c = snap(pre)
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_updated_rows", up_n, up_c),
             ("2_untouched_rows", un_n, un_c),
             ("3_timetravel_pre_update", tt_n, tt_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -2391,30 +2125,15 @@ def warehouse_replication_certified(spark: SparkSession, sf_dir: str) -> DataFra
 
     The replica's final counts + checksums replay in DuckDB from
     `orders` through the same update/delete algebra."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.replication import _write_offset, replicate
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_repl_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root)
+    root = scratch_root(sf_dir, "bxg_repl_scratch")
     src = Warehouse(spark, os.path.join(root, "src"))
     dst = Warehouse(spark, os.path.join(root, "dst"))
     off = os.path.join(root, "offsets.json")
     orders = load_table(spark, sf_dir, "orders")
-
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
     kb = orders.agg(
         F.min("o_orderkey").alias("kmin"), F.max("o_orderkey").alias("kmax")
     ).collect()[0]
@@ -2424,7 +2143,7 @@ def warehouse_replication_certified(spark: SparkSession, sf_dir: str) -> DataFra
     lo3 = int(kb["kmin"]) + span // 2
     hi3 = lo3 + span // 10
 
-    src.merge_batch_incremental({"functions": df})
+    src.merge_batch_incremental({"functions": function_rows(orders)})
     src.update_where(
         "functions", [("size", "between", (lo, hi))], {"size": F.col("size") + 1_000_000}
     )
@@ -2447,17 +2166,14 @@ def warehouse_replication_certified(spark: SparkSession, sf_dir: str) -> DataFra
     if dst.versions("functions") != versions_before:
         raise AssertionError("crash-replay published replica versions")
 
-    r = dst.read("functions").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-    ).collect()[0]
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
-            ("1_replica_state", int(r["n"]), int(r["c"] or 0)),
+            ("1_replica_state", *snap(dst.read("functions"))),
             ("2_replica_equals_source", resid, 0),
             ("3_replay_publishes_nothing", 0, 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -2513,36 +2229,20 @@ def warehouse_cdf_stream_certified(spark: SparkSession, sf_dir: str) -> DataFram
     as version 0's inserts, the overlay as its delete+insert pairs
     (unchanged-value re-merges contribute NOTHING — row-level, not
     file-level), the delete as one delete row."""
-    import hashlib
-    import os
-    import shutil
     import uuid as _uuid
 
     from ..model import load_table
     from ..sources.cdf_stream import register_warehouse_cdf_datasource
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_cdfstream_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_cdfstream_scratch")
     wh = Warehouse(spark, root)
     register_warehouse_cdf_datasource(spark)
     orders = load_table(spark, sf_dir, "orders")
 
-    base = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        (F.col("o_orderkey") % 997).cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    overlay = orders.filter(F.col("o_orderkey") % 1999 == 0).select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        (F.col("o_orderkey") % 983).cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    ).unionByName(
+    k = F.col("o_orderkey")
+    base = function_rows(orders, k % 997)
+    overlay = function_rows(orders.filter(k % 1999 == 0), k % 983).unionByName(
         spark.createDataFrame(
             [("synthetic_new_key", "fn_synthetic_new_key", "", 123457, "Internal")],
             "uid string, name string, address string, size long, type string",
@@ -2647,30 +2347,17 @@ def warehouse_deletion_vectors_certified(spark: SparkSession, sf_dir: str) -> Da
 
     Remaining rows, the deleted set, pre-state and post-purge state
     replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
     import uuid as _uuid
 
     from ..model import load_table
     from ..sources.cdf_stream import register_warehouse_cdf_datasource
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_dv_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_dv_scratch")
     wh = Warehouse(spark, root)
     register_warehouse_cdf_datasource(spark)
     orders = load_table(spark, sf_dir, "orders")
-
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    wh.merge_batch_incremental({"functions": df}, n_buckets=16)
+    wh.merge_batch_incremental({"functions": function_rows(orders)}, n_buckets=16)
     v_pre = wh.versions("functions")[-1]
     m0 = wh._manifest("functions", v_pre)
     min_file = min(m0["bytes"].values())
@@ -2697,12 +2384,6 @@ def warehouse_deletion_vectors_certified(spark: SparkSession, sf_dir: str) -> Da
     m1 = wh._manifest("functions", wh.versions("functions")[-1])
     if m1["bytes"] != m0["bytes"]:
         raise AssertionError("DV commits must not touch data files")
-
-    def snap(df_):
-        r = df_.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"] or 0)
 
     rem_n, rem_c = snap(wh.read("functions"))
     ch = wh.read_changes("functions", v_pre)
@@ -2742,15 +2423,15 @@ def warehouse_deletion_vectors_certified(spark: SparkSession, sf_dir: str) -> Da
     if mfin.get("dvs"):
         raise AssertionError("optimize must purge deletion vectors")
     ap_n, ap_c = snap(wh.read("functions"))
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_remaining", rem_n, rem_c),
             ("2_cdc_deleted", del_n, del_c),
             ("3_timetravel_pre", tt_n, tt_c),
             ("4_after_purge", ap_n, ap_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -2808,30 +2489,17 @@ def warehouse_column_mapping_certified(spark: SparkSession, sf_dir: str) -> Data
       declares the logical schema and surfaces the DV delete's rows.
 
     All phase values replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
     import uuid as _uuid
 
     from ..model import load_table
     from ..sources.cdf_stream import register_warehouse_cdf_datasource
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_colmap_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_colmap_scratch")
     wh = Warehouse(spark, root)
     register_warehouse_cdf_datasource(spark)
     orders = load_table(spark, sf_dir, "orders")
-
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    wh.merge_batch_incremental({"functions": df}, n_buckets=16)
+    wh.merge_batch_incremental({"functions": function_rows(orders)}, n_buckets=16)
     v_pre = wh.versions("functions")[-1]
     m0 = wh._manifest("functions", v_pre)
 
@@ -2852,20 +2520,13 @@ def warehouse_column_mapping_certified(spark: SparkSession, sf_dir: str) -> Data
 
     kmin = int(orders.agg(F.min("o_orderkey")).collect()[0][0])
     lo, hi = kmin, kmin + 9
-
-    def snap(df_, col="byte_size"):
-        r = df_.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(col).alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"] or 0)
-
     got, diag = wh.scan(
         "functions", [("byte_size", "between", (lo, hi))], with_diagnostics=True
     )
     if not diag["files_read"] < diag["files_total"]:
         raise AssertionError(f"renamed-column scan lost its pruning: {diag}")
-    s1_n, s1_c = snap(got)
-    tt_n, tt_c = snap(wh.read("functions", version=v_pre), col="size")
+    s1_n, s1_c = snap(got, "byte_size")
+    tt_n, tt_c = snap(wh.read("functions", version=v_pre))
 
     d = wh.delete_where_dv("functions", [("byte_size", "between", (lo, hi))])
     if d["files_rewritten"] != 0 or d["rows_deleted"] != s1_n:
@@ -2885,17 +2546,17 @@ def warehouse_column_mapping_certified(spark: SparkSession, sf_dir: str) -> Data
     st = spark.table(name)
     if "byte_size" not in st.columns or "size" in st.columns:
         raise AssertionError(f"CDF stream schema not logical: {st.columns}")
-    sd_n, sd_c = snap(st.filter(F.col("_change") == "delete"))
-    rem_n, rem_c = snap(wh.read("functions"))
-    return spark.createDataFrame(
+    sd_n, sd_c = snap(st.filter(F.col("_change") == "delete"), "byte_size")
+    rem_n, rem_c = snap(wh.read("functions"), "byte_size")
+    return phase_rows(
+        spark,
         [
             ("1_renamed_scan", s1_n, s1_c),
             ("2_timetravel_pre", tt_n, tt_c),
             ("3_cdf_dv_deletes", sd_n, sd_c),
             ("4_remaining", rem_n, rem_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -2944,17 +2605,10 @@ def warehouse_multi_table_txn_certified(spark: SparkSession, sf_dir: str) -> Dat
     Phase 1 totals the first import (sum of sizes over `orders`);
     phase 2 totals the second (doubled rows: both tables keyed
     disjointly across imports)."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_cat_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_cat_scratch"))
     orders = load_table(spark, sf_dir, "orders")
 
     def fns(tag):
@@ -2994,22 +2648,17 @@ def warehouse_multi_table_txn_certified(spark: SparkSession, sf_dir: str) -> Dat
         raise AssertionError("crash between table commits moved the catalog")
     pins = wh.catalog_snapshot()
 
-    def snap(pins_):
-        f = wh.read_snapshot("functions", pins_)
-        c = wh.read_snapshot("calls", pins_)
-        nf = f.count()
-        nc = c.count()
+    def pinned(pins_):
+        nf, size_sum = snap(wh.read_snapshot("functions", pins_))
+        nc = wh.read_snapshot("calls", pins_).count()
         if nf != nc:
-            raise AssertionError(
-                f"snapshot is TORN: {nf} functions vs {nc} calls"
-            )
-        s = f.agg(F.sum("size")).collect()[0][0]
-        return int(nf + nc) // 2, int(s or 0)
+            raise AssertionError(f"snapshot is TORN: {nf} functions vs {nc} calls")
+        return nf, size_sum
 
     # the live head must be torn right now (that is what we protect from)
     if wh.read("calls").count() == wh.read("functions").count():
         raise AssertionError("crash injection failed to tear the live head")
-    n1, c1 = snap(pins)
+    n1, c1 = pinned(pins)
 
     v2 = wh.import_atomic(
         {"functions": fns("b"), "calls": calls("b")},
@@ -3017,7 +2666,7 @@ def warehouse_multi_table_txn_certified(spark: SparkSession, sf_dir: str) -> Dat
         batch_seq=2,
     )
     pins2 = wh.catalog_snapshot()
-    n2, c2 = snap(pins2)
+    n2, c2 = pinned(pins2)
     v3 = wh.import_atomic(
         {"functions": fns("b"), "calls": calls("b")},
         txn=("imp", 2),
@@ -3025,13 +2674,9 @@ def warehouse_multi_table_txn_certified(spark: SparkSession, sf_dir: str) -> Dat
     )
     if v3 != v2:
         raise AssertionError("idempotent replay created a new catalog version")
-    return spark.createDataFrame(
-        [
-            ("1_snapshot_during_crash", n1, c1),
-            ("2_snapshot_after_retry", n2, c2),
-        ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    return phase_rows(
+        spark, [("1_snapshot_during_crash", n1, c1), ("2_snapshot_after_retry", n2, c2)]
+    )
 
 
 @register(
@@ -3078,29 +2723,18 @@ def warehouse_cdf_watermark_certified(spark: SparkSession, sf_dir: str) -> DataF
 
     The final sink equals the batch twin the oracle computes from
     `orders` with the same watermark arithmetic."""
-    import hashlib
-    import os
-    import shutil
     import uuid as _uuid
 
     from ..model import load_table
     from ..sources.warehouse import Warehouse
     from ..streaming.cdf_consumers import cdf_windowed_query
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_cdfwm_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_cdfwm_scratch")
     wh = Warehouse(spark, root)
     orders = load_table(spark, sf_dir, "orders")
 
-    snap = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.lit("fn").alias("name"),
-        F.lit("").alias("address"),
-        (F.lit(1000) + F.col("o_orderkey") % 100).cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    wh.merge_batch_incremental({"functions": snap}, n_buckets=8)
+    seed = function_rows(orders, F.lit(1000) + F.col("o_orderkey") % 100)
+    wh.merge_batch_incremental({"functions": seed}, n_buckets=8)
     max_res = int(orders.agg(F.max(F.col("o_orderkey") % 100)).collect()[0][0])
     wm1 = 1000 + max_res - 10
 
@@ -3175,18 +2809,13 @@ def warehouse_cdf_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream result must equal the batch twin (asserted in-gate against
     a static join of the two live tables; the oracle replays the same
     from `orders`)."""
-    import hashlib
-    import os
-    import shutil
     import uuid as _uuid
 
     from ..model import load_table
     from ..sources.warehouse import Warehouse
     from ..streaming.cdf_consumers import cdf_two_feed_join
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_cdfjoin_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_cdfjoin_scratch")
     wh = Warehouse(spark, root)
     orders = load_table(spark, sf_dir, "orders")
 
@@ -3313,27 +2942,12 @@ def warehouse_merge_into_certified(spark: SparkSession, sf_dir: str) -> DataFram
     delete+insert pair, delete = delete, insert = insert, carries
     contribute nothing); and replaying the merge under the same txn key
     publishes nothing.  Final state replays in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_mi_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_mi_scratch"))
     orders = load_table(spark, sf_dir, "orders")
-
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    wh.merge_batch_incremental({"functions": df}, n_buckets=16)
+    wh.merge_batch_incremental({"functions": function_rows(orders)}, n_buckets=16)
     v0 = wh.versions("functions")[-1]
 
     upd = orders.filter(F.col("o_orderkey") % 5 == 0).select(
@@ -3384,12 +2998,6 @@ def warehouse_merge_into_certified(spark: SparkSession, sf_dir: str) -> DataFram
     if wh.versions("functions")[-1] != v1 or d2["rows_updated"]:
         raise AssertionError("txn replay must publish nothing")
 
-    def snap(df_):
-        r = df_.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-        ).collect()[0]
-        return int(r["n"]), int(r["c"] or 0)
-
     live = wh.read("functions")
     u_n, u_c = snap(live.filter(F.col("size") >= 1000000))
     del_keys = orders.filter(F.col("o_orderkey") % 5 == 1).select(
@@ -3399,18 +3007,16 @@ def warehouse_merge_into_certified(spark: SparkSession, sf_dir: str) -> DataFram
         raise AssertionError("deleted keys survived the merge")
     i_n, _ = snap(live.filter(F.col("uid").startswith("x")))
     f_n, f_c = snap(live)
-    return spark.createDataFrame(
+    _, del_c = snap(orders.filter(F.col("o_orderkey") % 5 == 1), "o_orderkey")
+    return phase_rows(
+        spark,
         [
             ("1_updated", u_n, u_c),
-            ("2_deleted", n_del, int(
-                orders.filter(F.col("o_orderkey") % 5 == 1)
-                .agg(F.sum(F.col("o_orderkey").cast("long"))).collect()[0][0] or 0
-            )),
+            ("2_deleted", n_del, del_c),
             ("3_inserted", i_n, 0),
             ("4_final", f_n, f_c),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -3446,26 +3052,14 @@ def warehouse_timestamp_travel_certified(spark: SparkSession, sf_dir: str) -> Da
     head; and a timestamp BEFORE the first commit raises loudly
     (asking for a state that never existed must not silently read
     something else).  Both states replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
+    import time
 
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_tstravel_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_tstravel_scratch"))
     orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.lit("fn").alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    wh.merge_batch_incremental({"functions": df}, n_buckets=8)
+    wh.merge_batch_incremental({"functions": function_rows(orders)}, n_buckets=8)
     v0 = wh.versions("functions")[-1]
     ts0 = wh._manifest("functions", v0)["committed_at"]
     kmin = int(orders.agg(F.min("o_orderkey")).collect()[0][0])
@@ -3477,20 +3071,15 @@ def warehouse_timestamp_travel_certified(spark: SparkSession, sf_dir: str) -> Da
     if not ts1 >= ts0:
         raise AssertionError("publish timestamps must be monotone")
 
-    def snap(ts):
-        r = wh.read("functions", timestamp=ts).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-        ).collect()[0]
-        return int(r["n"]), int(r["c"] or 0)
+    def as_of(ts):
+        return snap(wh.read("functions", timestamp=ts))
 
-    n0, c0 = snap(ts0)
+    n0, c0 = as_of(ts0)
     mid = (ts0 + ts1) / 2
-    if ts1 > ts0 and snap(mid) != (n0, c0):
+    if ts1 > ts0 and as_of(mid) != (n0, c0):
         raise AssertionError("between-commit timestamp must resolve backward")
-    n1, c1 = snap(ts1)
-    import time as _t
-
-    if snap(_t.time() + 3600) != (n1, c1):
+    n1, c1 = as_of(ts1)
+    if as_of(time.time() + 3600) != (n1, c1):
         raise AssertionError("future timestamp must read the live head")
     try:
         wh.read("functions", timestamp=ts0 - 1e6)
@@ -3498,13 +3087,9 @@ def warehouse_timestamp_travel_certified(spark: SparkSession, sf_dir: str) -> Da
         pass
     else:
         raise AssertionError("pre-first-commit timestamp must raise")
-    return spark.createDataFrame(
-        [
-            ("1_as_of_first_commit", n0, c0),
-            ("2_as_of_second_commit", n1, c1),
-        ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    return phase_rows(
+        spark, [("1_as_of_first_commit", n0, c0), ("2_as_of_second_commit", n1, c1)]
+    )
 
 
 @register(
@@ -3562,24 +3147,12 @@ def warehouse_mor_update_certified(spark: SparkSession, sf_dir: str) -> DataFram
 
     Updated rows, untouched rows, and the pre-update state replay in
     DuckDB from `orders`; phase 4 pins the measured CoW diff at 0."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_mor_update_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_mor_update_scratch")
     orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
+    df = function_rows(orders)
 
     kb = orders.agg(
         F.min("o_orderkey").alias("kmin"), F.max("o_orderkey").alias("kmax")
@@ -3637,24 +3210,18 @@ def warehouse_mor_update_certified(spark: SparkSession, sf_dir: str) -> DataFram
     if diff_n != 0:
         raise AssertionError(f"MOR vs CoW update diverge by {diff_n} rows")
 
-    def snap(df_):
-        r = df_.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("checksum")
-        ).collect()[0]
-        return int(r["n"]), int(r["checksum"] or 0)
-
     up_n, up_c = snap(live.filter(F.col("type") == "External"))
     un_n, un_c = snap(live.filter(F.col("type") == "Internal"))
     tt_n, tt_c = snap(pre)
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_updated_rows", up_n, up_c),
             ("2_untouched_rows", un_n, un_c),
             ("3_timetravel_pre_update", tt_n, tt_c),
             ("4_cow_equivalence_diff", diff_n, 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -3718,24 +3285,12 @@ def warehouse_merge_into_mor_certified(spark: SparkSession, sf_dir: str) -> Data
       delete+insert pair, delete = delete, insert = insert).
 
     Arm counts and the final state replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_mi_mor_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_mi_mor_scratch")
     orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
+    df = function_rows(orders)
     upd = orders.filter(F.col("o_orderkey") % 5 == 0).select(
         F.col("o_orderkey").cast("string").alias("uid"),
         (F.col("o_orderkey").cast("long") + 1000000).alias("new_size"),
@@ -3806,12 +3361,6 @@ def warehouse_merge_into_mor_certified(spark: SparkSession, sf_dir: str) -> Data
     if diff_n != 0:
         raise AssertionError(f"MOR vs CoW merge diverge by {diff_n} rows")
 
-    def snap(df_):
-        r = df_.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-        ).collect()[0]
-        return int(r["n"]), int(r["c"] or 0)
-
     u_n, u_c = snap(live_m.filter(F.col("size") >= 1000000))
     d_n, d_c = snap(
         mor.read("functions", version=v0).join(
@@ -3820,7 +3369,8 @@ def warehouse_merge_into_mor_certified(spark: SparkSession, sf_dir: str) -> Data
     )
     i_n, _ = snap(live_m.filter(F.col("uid").startswith("x")))
     f_n, f_c = snap(live_m)
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_updated", u_n, u_c),
             ("2_deleted", d_n, d_c),
@@ -3828,8 +3378,7 @@ def warehouse_merge_into_mor_certified(spark: SparkSession, sf_dir: str) -> Data
             ("4_final", f_n, f_c),
             ("5_mor_cow_diff", diff_n, 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -3893,27 +3442,14 @@ def warehouse_cdf_update_images_certified(spark: SparkSession, sf_dir: str) -> D
       feed derivation for the whole harness, not one per phase.
 
     All four label populations replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
     from ..streaming.merge_sink import apply_changes_merge_into
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_cdfimg_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_cdfimg_scratch")
     orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
     src_wh = Warehouse(spark, os.path.join(root, "src"))
-    src_wh.merge_batch_incremental({"functions": df}, n_buckets=16)
+    src_wh.merge_batch_incremental({"functions": function_rows(orders)}, n_buckets=16)
     v0 = src_wh.versions("functions")[-1]
     # replica bootstrap = filesystem snapshot of v0 (copied BEFORE the
     # DML commit) — a real replica restores from a storage snapshot,
@@ -3995,7 +3531,8 @@ def warehouse_cdf_update_images_certified(spark: SparkSession, sf_dir: str) -> D
     if diff_n != 0:
         raise AssertionError(f"image-fed replica diverges by {diff_n} rows")
 
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_update_preimages", pre_n, pre_c),
             ("2_update_postimages", post_n, post_c),
@@ -4003,8 +3540,7 @@ def warehouse_cdf_update_images_certified(spark: SparkSession, sf_dir: str) -> D
             ("4_plain_inserts", ins_n, 0),
             ("5_replica_diff", diff_n, 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -4044,20 +3580,13 @@ def warehouse_model_store_certified(spark: SparkSession, sf_dir: str) -> DataFra
     Production roots resolve via ``spark.bxg.modelRoot``
     (`operators/similarity.py:_default_model_store`); the scratch root
     here plays that role."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.model_store import ModelStore
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_modelstore_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     t = int(orders.agg(F.sum("o_orderkey").alias("t")).collect()[0]["t"])
 
-    store = ModelStore(spark, root)
+    store = ModelStore(spark, scratch_root(sf_dir, "bxg_modelstore_scratch"))
     ck = "trainer-v1"
     store.put("codebook:test", {"total": t}, kind="kmeans_codebook", content_key=ck)
     got1 = store.get("codebook:test", content_key=ck)
@@ -4103,7 +3632,8 @@ def warehouse_model_store_certified(spark: SparkSession, sf_dir: str) -> DataFra
         if v1 in store.wh.versions("_models")[:-1]:
             raise AssertionError("vacuum kept the expired artifact version")
 
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_put_get", 1, got1["total"]),
             ("2_stale_key_miss", miss_n, 0),
@@ -4111,8 +3641,7 @@ def warehouse_model_store_certified(spark: SparkSession, sf_dir: str) -> DataFra
             ("4_timetravel_old", 1, old_payload["total"]),
             ("5_vacuumed_live", 1, got3["total"]),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -4161,25 +3690,11 @@ def warehouse_auto_optimize_certified(spark: SparkSession, sf_dir: str) -> DataF
     observable (symmetric multiset diff across it pinned at 0), and
     (d) a threshold-disarmed call is a metadata-only no-op (no commit).
     Phases replay in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_autoopt_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
-    orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_autoopt_scratch"))
+    df = function_rows(load_table(spark, sf_dir, "orders"))
     wh.merge_batch_incremental({"functions": df}, n_buckets=16)
 
     # disarmed thresholds: checking must commit nothing
@@ -4232,18 +3747,15 @@ def warehouse_auto_optimize_certified(spark: SparkSession, sf_dir: str) -> DataF
     if diff_n != 0:
         raise AssertionError(f"auto-purge changed content by {diff_n} rows")
 
-    r = live.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-    ).collect()[0]
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
-            ("1_live_after_dml", int(r["n"]), int(r["c"] or 0)),
+            ("1_live_after_dml", *snap(live)),
             ("2_tombstones_before_purge", int(s_before["tombstone_rows"]), 0),
             ("3_tombstones_after_purge", int(s_after["tombstone_rows"]), 0),
             ("4_content_diff_across_purge", diff_n, 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -4290,10 +3802,6 @@ def streaming_merge_into_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the diff at 0), and a hand-replayed copy of the final feed
     batch publishes ZERO writes (phase 3 — the crash contract).
     The replica state replays in DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
     from ..streaming.merge_sink import (
@@ -4301,17 +3809,9 @@ def streaming_merge_into_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         cdf_merge_into_apply,
     )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_mergesink_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_mergesink_scratch")
     orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
+    df = function_rows(orders)
     src = Warehouse(spark, os.path.join(root, "src"))
     src.merge_batch_incremental({"functions": df}, n_buckets=16)
     src.merge_into(
@@ -4368,17 +3868,14 @@ def streaming_merge_into_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"replayed batch wrote {replay_writes} rows / published a commit"
         )
 
-    r = d_live.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-    ).collect()[0]
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
-            ("1_replica_state", int(r["n"]), int(r["c"] or 0)),
+            ("1_replica_state", *snap(d_live)),
             ("2_source_replica_diff", diff_n, 0),
             ("3_replayed_batch_writes", int(replay_writes), 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -4436,24 +3933,12 @@ def warehouse_merge_into_by_source_certified(spark: SparkSession, sf_dir: str) -
     (phase 5 pins the diff at 0) and every pre-merge file kept its
     exact bytes on the MOR side.  All four populations replay in
     DuckDB from `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_mibs_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root(sf_dir, "bxg_mibs_scratch")
     orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
+    df = function_rows(orders)
     src = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         F.col("o_orderkey").cast("string").alias("uid"),
         (F.col("o_orderkey").cast("long") + 1000000).alias("new_size"),
@@ -4486,25 +3971,17 @@ def warehouse_merge_into_by_source_certified(spark: SparkSession, sf_dir: str) -
     if diff_n != 0:
         raise AssertionError(f"MOR vs CoW by-source merge diverge by {diff_n}")
 
-    def snap(df_):
-        r = df_.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-        ).collect()[0]
-        return int(r["n"]), int(r["c"] or 0)
-
     mu_n, mu_c = snap(live_m.filter(F.col("size") >= 1000000))
     st_n, st_c = snap(live_m.filter(F.col("type") == "Stale"))
     del_n = d_mor["rows_deleted"]
-    del_c = int(
-        df.filter((F.col("size") % 2 == 1) & (F.col("size") % 3 == 0))
-        .agg(F.sum("size")).collect()[0][0] or 0
-    )
+    _, del_c = snap(df.filter((F.col("size") % 2 == 1) & (F.col("size") % 3 == 0)))
     if d_mor["rows_updated"] != mu_n + st_n:
         raise AssertionError(
             f"arm accounting wrong: {d_mor['rows_updated']} != {mu_n}+{st_n}"
         )
     f_n, f_c = snap(live_m)
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
             ("1_matched_updates", mu_n, mu_c),
             ("2_by_source_deleted", del_n, del_c),
@@ -4512,8 +3989,7 @@ def warehouse_merge_into_by_source_certified(spark: SparkSession, sf_dir: str) -
             ("4_final", f_n, f_c),
             ("5_mor_cow_diff", diff_n, 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )
 
 
 @register(
@@ -4566,25 +4042,12 @@ def warehouse_auto_maintenance_certified(
     invariant `tools/endurance_replication.py --auto-maintain` holds
     over long sessions).  Replica state replays in DuckDB from
     `orders`."""
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
     from ..streaming.merge_sink import apply_changes_merge_into
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_automaint_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
+    root = scratch_root(sf_dir, "bxg_automaint_scratch")
+    df = function_rows(load_table(spark, sf_dir, "orders"))
     src = Warehouse(spark, os.path.join(root, "src"))
     src.merge_batch_incremental({"functions": df}, n_buckets=16)
     # replica bootstrap = filesystem snapshot of the seed (the
@@ -4654,16 +4117,13 @@ def warehouse_auto_maintenance_certified(
     if debt["files_dvd"] or debt["tombstone_rows"]:
         raise AssertionError(f"unattended replica kept MOR debt: {debt}")
 
-    r = d_live.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("size").alias("c")
-    ).collect()[0]
-    return spark.createDataFrame(
+    return phase_rows(
+        spark,
         [
-            ("1_replica_state", int(r["n"]), int(r["c"] or 0)),
+            ("1_replica_state", *snap(d_live)),
             ("2_source_replica_diff", diff_n, 0),
             ("3_policy_fired", min(fires, 1), 0),
             ("4_replay_writes", int(replay_writes), 0),
             ("5_residual_tombstones", int(debt["tombstone_rows"]), 0),
         ],
-        "phase string, n long, checksum long",
-    ).orderBy("phase")
+    )

@@ -65,24 +65,13 @@ def layout_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters would mean Spark scanned every partition and
     filtered rows after the fact).  A green CORRECTNESS row therefore
     pins both the values and the pruning."""
-    import hashlib
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..model import load_table
+    from ._harness import scratch_root
 
     ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
-    # Fixed per-(sf_dir) scratch path, overwritten in place: repeated
-    # gate/bench runs reuse one directory instead of leaking a fresh
-    # mkdtemp per invocation (ADVICE r6).  The result DataFrame is lazy
-    # over this path, so it must outlive the call — overwrite-in-place
-    # bounds the disk footprint at one copy per distinct input dir.
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), "bxg_part_scratch", f"events_parted_{key}"
-    )
+    path = scratch_root(sf_dir, "bxg_part_scratch") + "/events_parted"
     ev.write.partitionBy("event_date").mode("overwrite").parquet(path)
     back = spark.read.parquet(path).filter(
         F.col("event_date") == F.to_date(F.lit("2024-01-15"))

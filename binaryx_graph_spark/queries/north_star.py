@@ -1988,11 +1988,6 @@ def ann_ivf_incremental_certified(spark: SparkSession, sf_dir: str) -> DataFrame
     Returned rows: an ALL-LISTS probe over the maintained index (top-10
     for stored vector 9) — which must equal DuckDB's brute-force cosine
     over the post-DML corpus, replayed relationally in the oracle."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.ann_index import (
         cosine_topk_ivf_index,
         ivf_index_assignments,
@@ -2000,11 +1995,9 @@ def ann_ivf_incremental_certified(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from ..operators.similarity import ivf_assign, kmeans_codebook
     from ..sources.warehouse import Warehouse
+    from ._harness import scratch_root
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "bxg_annidx_scratch", key)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch_root(sf_dir, "bxg_annidx_scratch"))
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("embedding").cast("array<float>").alias("embedding"),

@@ -13,6 +13,7 @@ from ..model import load_table
 from ..operators.multimodal import decode_media, media_from_documents
 from ..registry import register
 from ..streaming.ingest_stream import windowed_event_counts
+from ._harness import scratch_root
 
 _HEX = "0123456789abcdef"
 
@@ -1009,15 +1010,13 @@ def pipeline_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated row changes n_docs/id_digest; a mangled text changes
     n_chars). The digest is an order-independent integer sum, so it is
     partitioning-proof on both engines."""
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     shard = (
         F.conv(F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 4), 16, 10)
         .cast("long")
         % _N_SHARDS
     )
-    out = tempfile.mkdtemp(prefix="bxg_export_") + "/jsonl"
+    out = scratch_root(sf_dir, "bxg_export_scratch") + "/jsonl"
     (
         docs.select("doc_id", "text", shard.alias("shard"))
         .repartition(_N_SHARDS, "shard")

@@ -9,34 +9,19 @@ rather than getting a private second planner.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ._harness import function_rows, scratch_root
 
 
 def _scratch_wh(spark, sf_dir, slug):
-    import hashlib
-    import os
-    import shutil
-
     from ..model import load_table
     from ..sources.warehouse import Warehouse
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), slug, key)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders")
-    df = orders.select(
-        F.col("o_orderkey").cast("string").alias("uid"),
-        F.concat(F.lit("fn_"), F.col("o_orderkey").cast("string")).alias("name"),
-        F.lit("").alias("address"),
-        F.col("o_orderkey").cast("long").alias("size"),
-        F.lit("Internal").alias("type"),
-    )
-    wh = Warehouse(spark, root)
+    df = function_rows(load_table(spark, sf_dir, "orders"))
+    wh = Warehouse(spark, scratch_root(sf_dir, slug))
     wh.merge_batch_incremental({"functions": df}, n_buckets=16)
     return wh, df
 

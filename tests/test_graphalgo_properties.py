@@ -249,12 +249,6 @@ def test_scc_fwbw_exact_beyond_bounded_depth(spark):
     e = spark.createDataFrame(edges, "src long, dst long")
     got = {r.node: r.scc_id for r in scc_fwbw(e).collect()}
     assert got == {v: 0 for v in range(n)}
-    # same result through the strategy knob (max_depth ignored)
-    via_knob = {
-        r.node: r.scc_id
-        for r in scc_bounded(e, max_depth=6, strategy="fwbw").collect()
-    }
-    assert via_knob == got
     # and the bounded estimator genuinely under-approximates here
     bounded = {r.node: r.scc_id for r in scc_bounded(e, max_depth=6).collect()}
     assert bounded != got
@@ -269,28 +263,6 @@ def test_scc_fwbw_max_rounds_fallback(spark):
     e = spark.createDataFrame(edges, "src long, dst long")
     got = {r.node: r.scc_id for r in scc_fwbw(e, max_rounds=1).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 5: 5, 10: 10, 11: 10, 12: 10}
-
-
-def test_scc_fwbw_seed_strategies_equal(spark):
-    """WCC-seeded partitions (the r7 disconnected-graph fix) and the
-    single-global-partition seed are the same exact algorithm after
-    round 1 — outputs must be identical on disjoint-region graphs,
-    where the seeds differ most."""
-    import random
-
-    from binaryx_graph_spark.operators.graphalgo import scc_fwbw
-
-    rng = random.Random(7)
-    # three disjoint regions: a 4-cycle, a chain into a 3-cycle, and a
-    # random blob — plus random extra intra-region edges
-    edges = [(0, 1), (1, 2), (2, 3), (3, 0)]
-    edges += [(10, 11), (11, 12), (12, 13), (13, 11)]
-    blob = list(range(20, 26))
-    edges += [(rng.choice(blob), rng.choice(blob)) for _ in range(10)]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    wcc = {r.node: r.scc_id for r in scc_fwbw(e, seed="wcc").collect()}
-    glob = {r.node: r.scc_id for r in scc_fwbw(e, seed="global").collect()}
-    assert wcc == glob
 
 
 def test_topo_layers_matches_reference(spark):

@@ -6,7 +6,14 @@ Asserts, without running Spark:
       verdict caught a 231≠232 drift this check would have flagged);
   (b) PLANS.md ``## <name>`` section count == registry count;
   (c) QUERIES.md row count == registry count;
-  (d) every witness_fps.json / witness_tombstones.json key ∈ registry.
+  (d) every witness_fps.json / witness_tombstones.json key ∈ registry;
+  (e) no harness in ``binaryx_graph_spark/queries/`` makes its own temp
+      dir: ``tempfile.mkdtemp(`` and a hand-keyed
+      ``hashlib.md5(os.path.abspath(sf_dir)`` appear only in
+      ``queries/_harness.py`` (``scratch_root``) and the two
+      content-addressed fixture caches, whose race-safe stage must stay
+      unique (``ingest_demo.graph_tables``,
+      ``cypher_write_queries._replayed_warehouse``).
 
 Run in the end-of-round snapshot (and any time after registering or
 removing a query).  Exit code 1 on any drift.
@@ -16,6 +23,7 @@ Usage: python -m tools.check_artifacts
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import os
@@ -27,6 +35,36 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from binaryx_graph_spark.registry import load_all  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: the temp-dir idioms check (e) confines to the shared helper
+_TEMP_IDIOMS = ("tempfile.mkdtemp(", "hashlib.md5(os.path.abspath(sf_dir)")
+#: (module, top-level function) allowed to use them besides _harness.py
+_TEMP_ALLOWED = {
+    ("ingest_demo.py", "graph_tables"),
+    ("cypher_write_queries.py", "_replayed_warehouse"),
+}
+
+
+def temp_idiom_sites(queries_dir: str) -> list[str]:
+    """``file:line (function)`` of every temp-dir idiom in the query
+    modules outside ``_harness.py`` and the allowed cache builds."""
+    sites = []
+    for path in sorted(glob.glob(os.path.join(queries_dir, "*.py"))):
+        fname = os.path.basename(path)
+        if fname == "_harness.py":
+            continue
+        with open(path) as f:
+            src = f.read()
+        owner = {}  # line -> enclosing top-level function
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.FunctionDef):
+                for ln in range(node.lineno, node.end_lineno + 1):
+                    owner[ln] = node.name
+        for ln, line in enumerate(src.splitlines(), start=1):
+            fn = owner.get(ln, "<module>")
+            if any(i in line for i in _TEMP_IDIOMS) and (fname, fn) not in _TEMP_ALLOWED:
+                sites.append(f"{fname}:{ln} ({fn})")
+    return sites
 
 
 def main() -> int:
@@ -87,12 +125,20 @@ def main() -> int:
         if bad:
             problems.append(f"(d) {fname} keys not in registry: {bad[:10]}")
 
+    # (e) one temp-dir idiom for the harnesses
+    sites = temp_idiom_sites(os.path.join(REPO, "binaryx_graph_spark", "queries"))
+    if sites:
+        problems.append(f"(e) temp dirs made outside queries/_harness.py: {sites[:10]}")
+
     if problems:
         print(f"ARTIFACT DRIFT ({len(problems)}):")
         for p in problems:
             print(" -", p)
         return 1
-    print(f"artifacts consistent: {len(names)} queries across registry, LOCALGATE, PLANS.md, QUERIES.md, ledgers")
+    print(
+        f"artifacts consistent: {len(names)} queries across registry, LOCALGATE, "
+        "PLANS.md, QUERIES.md, ledgers; harness temp dirs via queries/_harness.py"
+    )
     return 0
 
 

@@ -103,12 +103,12 @@ def main() -> None:
             .count()
         )
         pair_rows = _pair_set_size(edges)
-        w_pairs, n_pairs_out = _time(lambda: scc_bounded(edges, strategy="pairs"))
+        w_pairs, n_pairs_out = _time(lambda: scc_bounded(edges))
         w_fwbw, n_fwbw_out = _time(lambda: scc_fwbw(edges))
         # output equality (max_depth=6 covers the derived graph — the
         # gate query's contract); any divergence is a probe failure
         diff = (
-            scc_bounded(edges, strategy="pairs")
+            scc_bounded(edges)
             .exceptAll(scc_fwbw(edges))
             .count()
         )
